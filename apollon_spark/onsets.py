@@ -172,27 +172,23 @@ def pick_peaks(odf: DataFrame, n_after: int = 10, n_before: int = 10,
 
 
 def detect_onsets(docs: DataFrame, cfg: FeatureConfig | None = None,
-                  method: str = "flux", fused: bool = True,
-                  **pp) -> DataFrame:
+                  method: str = "flux", **pp) -> DataFrame:
     """Full detector: odf -> peaks -> (doc_id, frame, time).
 
-    ``fused=True`` (default, flux method): the whole detector runs in
-    ONE ``mapInPandas`` over whole docs — framing, rfft, flux, the
-    per-doc mean floor, and the peak scan all happen in the same task,
-    so the plan is Scan -> Project -> MapInPandas with ZERO shuffles
-    (the composed path shuffles twice: mean-floor window + peak-pick
-    groupBy). Identical output (tested fused-vs-composed)."""
+    The flux method runs in ONE ``mapInPandas`` over whole docs —
+    framing, rfft, flux, the per-doc mean floor, and the peak scan all
+    happen in the same task, so the plan is Scan -> Project ->
+    MapInPandas with ZERO shuffles. Its output equals
+    ``pick_peaks(flux_odf(docs, cfg))`` (tested). The entropy method
+    composes ``pick_peaks(entropy_odf(...))``."""
     from .operators.framing import FramingParams
     if method == "flux":
         cfg = cfg or FeatureConfig(framing=FramingParams(1024, 512))
-        if fused:
-            return _detect_onsets_fused(docs, cfg, **pp)
-        odf = flux_odf(docs, cfg)
-    elif method == "entropy":
-        odf = entropy_odf(docs, cfg)
-    else:
-        raise ValueError(method)
-    return pick_peaks(odf, **pp).select("doc_id", "frame", "time")
+        return _detect_onsets_fused(docs, cfg, **pp)
+    if method == "entropy":
+        return pick_peaks(entropy_odf(docs, cfg), **pp) \
+            .select("doc_id", "frame", "time")
+    raise ValueError(method)
 
 
 def _detect_onsets_fused(docs: DataFrame, cfg: FeatureConfig,

@@ -3,36 +3,21 @@
 The reference composes arrays positionally in one process (its implicit
 as-of gathers: segment<->position alignment segment.py:96-125, onset
 gathers segment.py:445-475). Spark has no native as-of join, and a
-plain range predicate degenerates to BroadcastNestedLoopJoin; the
-engine provides three explicit strategies:
-
-``union``    (default) single-shuffle sort-merge: union both sides,
-             one window sort per ``by`` partition, LOCF the right
-             columns onto left rows. O((|L|+|R|) log) per partition,
-             no row blowup — the 100TB path.
-``bucketed`` hand-built sort-merge within RANGE-PARTITIONED buckets:
-             time-bucketing salts hot ``by`` keys across partitions
-             (a hot key's rows scatter over many (by, bucket) tasks);
-             per-bucket carry-in rows are computed with a tiny
-             bucket-level LOCF and broadcast back. Explicit skew
-             control when one key dominates.
-``pandas``   per-group ``pd.merge_asof`` via applyInPandas — exactness
-             baseline for tests, small groups only.
-
-All strategies produce identical results (tested against each other).
+plain range predicate degenerates to BroadcastNestedLoopJoin. The
+engine runs one single-shuffle sort-merge instead: union both sides,
+one window sort per ``by`` partition, LOCF the right row onto left
+rows. O((|L|+|R|) log) per partition, no row blowup; ``backward``,
+``forward`` and ``nearest`` all share it.
 """
 from __future__ import annotations
 
-from typing import Iterator, Sequence
+from typing import Sequence
 
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 _TAG = "__asof_is_left"
 _RT = "__asof_rt"
-_LID = "__asof_lid"
-_BKT = "__asof_bkt"
 
 
 def _prep(left: DataFrame, right: DataFrame, on: str, right_on: str,
@@ -49,9 +34,7 @@ def _prep(left: DataFrame, right: DataFrame, on: str, right_on: str,
 def asof_join(left: DataFrame, right: DataFrame, on: str,
               by: str | Sequence[str] = (), right_on: str | None = None,
               value_cols: Sequence[str] | None = None,
-              allow_exact: bool = True, strategy: str = "union",
-              bucket_width: float | None = None,
-              tolerance: float | None = None,
+              allow_exact: bool = True, tolerance: float | None = None,
               direction: str = "backward") -> DataFrame:
     """For every left row, attach the most recent right row with
     ``right_on <= on`` (or ``<`` when not ``allow_exact``) within the
@@ -65,20 +48,14 @@ def asof_join(left: DataFrame, right: DataFrame, on: str,
     ``right_on >= on`` (next event after t), or ``"nearest"`` —
     whichever side is closer in absolute distance, ties to backward
     (pd.merge_asof parity for all three). Forward is implemented by
-    time negation and delegates to the backward machinery, so every
-    strategy / tolerance / allow_exact combination behaves
-    identically; tolerance then bounds ``right_on - on``. Nearest
-    runs natively in the union strategy (both directions filled from
-    ONE sort — no extra shuffle) and in the pandas baseline; the
-    bucketed strategy does not support it.
+    time negation and delegates to the backward path, so every
+    tolerance / allow_exact combination behaves identically;
+    tolerance then bounds ``right_on - on``. Nearest fills both
+    directions from ONE sort — no extra shuffle.
     """
     by = [by] if isinstance(by, str) else list(by)
     right_on = right_on or on
     value_cols = _prep(left, right, on, right_on, by, value_cols)
-    if direction == "forward" and strategy == "pandas":
-        # the baseline IS pandas — use its own forward path directly
-        return _asof_pandas(left, right, on, right_on, by, value_cols,
-                            allow_exact, tolerance, "forward")
     if direction == "forward":
         neg_on, neg_rt = f"__neg_{on}", f"__neg_{right_on}__r"
         l2 = left.withColumn(neg_on, -F.col(on).cast("double"))
@@ -86,26 +63,12 @@ def asof_join(left: DataFrame, right: DataFrame, on: str,
                   .drop(right_on)
         out = asof_join(l2, r2, on=neg_on, by=by, right_on=neg_rt,
                         value_cols=value_cols, allow_exact=allow_exact,
-                        strategy=strategy, bucket_width=bucket_width,
                         tolerance=tolerance, direction="backward")
         return out.drop(neg_on)
     if direction not in ("backward", "nearest"):
         raise ValueError(f"unknown direction {direction!r}")
-    if strategy == "union":
-        return _asof_union(left, right, on, right_on, by, value_cols,
-                           allow_exact, tolerance, direction)
-    if strategy == "bucketed":
-        if direction == "nearest":
-            raise ValueError("nearest direction: use the union or "
-                             "pandas strategy")
-        if bucket_width is None:
-            raise ValueError("bucketed strategy requires bucket_width")
-        return _asof_bucketed(left, right, on, right_on, by, value_cols,
-                              allow_exact, bucket_width, tolerance)
-    if strategy == "pandas":
-        return _asof_pandas(left, right, on, right_on, by, value_cols,
-                            allow_exact, tolerance, direction)
-    raise ValueError(f"unknown strategy {strategy!r}")
+    return _asof_union(left, right, on, right_on, by, value_cols,
+                       allow_exact, tolerance, direction)
 
 
 def _apply_tolerance(out: DataFrame, on: str, value_cols: Sequence[str],
@@ -198,107 +161,3 @@ def _asof_union(left: DataFrame, right: DataFrame, on: str, right_on: str,
                 F.col("__b.__match_t").alias(_RT))
     )
     return _apply_tolerance(out, on, value_cols, tolerance)
-
-
-def _asof_bucketed(left: DataFrame, right: DataFrame, on: str,
-                   right_on: str, by: list, value_cols: list,
-                   allow_exact: bool, width: float,
-                   tolerance: float | None) -> DataFrame:
-    """Range-partitioned sort-merge. Buckets salt hot keys; the only
-    cross-bucket dependency (the carry-in row) is resolved on the
-    bucket-granularity table, which is |by| x |buckets| small."""
-    lb = left.withColumn(_BKT, F.floor(F.col(on).cast("double") / width)) \
-             .withColumn(_LID, F.monotonically_increasing_id())
-    rb = right.withColumn(_BKT, F.floor(F.col(right_on).cast("double") / width))
-
-    rsel = rb.select(
-        *by, _BKT,
-        F.col(right_on).cast("double").alias(_RT),
-        *[F.col(c) for c in value_cols])
-
-    # last right row per (by, bucket) — the bucket's carry-out
-    carry_out = (
-        rsel.groupBy(*by, _BKT)
-        .agg(F.max_by(F.struct(_RT, *value_cols), F.col(_RT)).alias("__s"))
-        .select(*by, _BKT, "__s")
-    )
-    # carry-in for every left bucket: latest carry-out with a STRICTLY
-    # smaller bucket id — a bucket-level LOCF over a tiny table
-    s_type = carry_out.schema["__s"].dataType
-    lbuckets = lb.select(*by, _BKT).distinct() \
-                 .withColumn("__is_l", F.lit(1)) \
-                 .withColumn("__s", F.lit(None).cast(s_type))
-    co = carry_out.withColumn("__is_l", F.lit(0))
-    u = lbuckets.unionByName(co.select(*lbuckets.columns))
-    # left-bucket rows sort BEFORE the same bucket's carry-out so the
-    # carry-in only sees strictly earlier buckets (same-bucket rights
-    # are already direct candidates, time-filtered individually)
-    wb = (Window.partitionBy(*by)
-          .orderBy(F.col(_BKT).asc(), F.col("__is_l").desc())
-          .rowsBetween(Window.unboundedPreceding, -1))
-    carry_in = (
-        u.withColumn("__carry", F.last("__s", ignorenulls=True).over(wb))
-        .where((F.col("__is_l") == 1) & F.col("__carry").isNotNull())
-        .select(*by, _BKT,
-                F.col("__carry").getField(_RT).alias(_RT),
-                *[F.col("__carry").getField(c).alias(c) for c in value_cols])
-    )
-    # candidates per (by, bucket): in-bucket rights + the carry-in row.
-    # carry_in derives from lb, so rename the join keys to fresh
-    # attributes — otherwise `lb[c] == candidates[c]` can resolve both
-    # sides to the same column (trivially-true predicate).
-    candidates = rsel.unionByName(carry_in).select(
-        *[F.col(c).alias(f"__r_{c}") for c in by],
-        F.col(_BKT).alias(f"__r_{_BKT}"),
-        _RT, *value_cols)
-
-    cond = [lb[c] == candidates[f"__r_{c}"] for c in by] + \
-        [lb[_BKT] == candidates[f"__r_{_BKT}"]]
-    time_ok = (candidates[_RT] <= lb[on].cast("double")) if allow_exact \
-        else (candidates[_RT] < lb[on].cast("double"))
-    joined = lb.join(candidates, cond, "left") \
-               .where(time_ok | candidates[_RT].isNull())
-    # keep the latest candidate per left row; rows whose only candidates
-    # were time-filtered out are restored by the outer re-join below
-    best = (
-        joined.groupBy(lb[_LID].alias(_LID))
-        .agg(F.max_by(F.struct(_RT, *value_cols), F.col(_RT)).alias("__s"))
-    )
-    out = (
-        lb.join(best, _LID, "left")
-        .select(*[c for c in left.columns],
-                F.col("__s").getField(_RT).alias(_RT),
-                *[F.col("__s").getField(c).alias(c) for c in value_cols])
-    )
-    return _apply_tolerance(out, on, value_cols, tolerance)
-
-
-def _asof_pandas(left: DataFrame, right: DataFrame, on: str, right_on: str,
-                 by: list, value_cols: list, allow_exact: bool,
-                 tolerance: float | None,
-                 direction: str = "backward") -> DataFrame:
-    """Cogrouped ``pd.merge_asof`` per ``by`` group (exactness
-    baseline; whole groups must fit in a pandas frame)."""
-    from pyspark.sql.types import StructType
-    out_schema = StructType(list(left.schema.fields)
-                            + [right.schema[c] for c in value_cols])
-    lcols = left.columns
-
-    def fn(lpdf: pd.DataFrame, rpdf: pd.DataFrame) -> pd.DataFrame:
-        lpart = lpdf.sort_values(on)
-        rpart = rpdf[[right_on] + value_cols].sort_values(right_on)
-        merged = pd.merge_asof(
-            lpart, rpart, left_on=on, right_on=right_on,
-            allow_exact_matches=allow_exact, tolerance=tolerance,
-            direction=direction, suffixes=("", "__r"))
-        if right_on in lcols:
-            merged = merged.drop(columns=[right_on + "__r"])
-        else:
-            merged = merged.drop(columns=[right_on])
-        return merged[lcols + value_cols]
-
-    return (
-        left.groupBy(*by)
-        .cogroup(right.groupBy(*by))
-        .applyInPandas(fn, out_schema)
-    )

@@ -320,8 +320,8 @@ def assign_bmu(vectors: DataFrame, vec_col: str, weights: np.ndarray,
     """Attach BMU index + distance to every row — broadcast weights,
     vectorized argmin per Arrow batch; never a crossJoin.
 
-    ``round_scale``: round the distances to this many decimals BEFORE
-    the argmin (ties -> lowest unit). A determinism knob for
+    ``round_scale``: round the distances half-up to this many decimals
+    BEFORE the argmin (ties -> lowest unit). A determinism knob for
     value-compared outputs: two units whose true distances differ by
     float-sum noise usually round to the SAME grid value and the unit
     tiebreak decides identically everywhere, instead of the raw
@@ -344,7 +344,9 @@ def assign_bmu(vectors: DataFrame, vec_col: str, weights: np.ndarray,
             x = np.stack(pdf[vec_col].to_numpy())
             if st["r"] is not None:
                 d = cdist(st["w"], x, st["m"])
-                d = np.round(d, st["r"])
+                # HALF-UP, as DuckDB round(): np.round is half-even
+                scale = 10.0 ** st["r"]
+                d = np.floor(d * scale + 0.5) / scale
                 bmu, dist = d.argmin(axis=0), d.min(axis=0)
             else:
                 bmu, dist = best_match(st["w"], x, st["m"])

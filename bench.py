@@ -110,12 +110,10 @@ def bench_features(spark, sf: float, n_docs: int | None = None) -> dict:
     }
 
 
-def _asof_skew(spark, sf_dir: str, strategy: str):
-    """Whale-key as-of: ONE hot user owns ~50% of all events (the
-    skew shape SCALE.md's salting claim is about). The bucketed
-    strategy splits the hot key across (user, time-bucket) salts so no
-    single task owns half the data; union runs the same input through
-    the plain per-key window for comparison."""
+def _asof_skew(spark, sf_dir: str):
+    """Whale-key as-of: ONE hot user owns ~50% of all events, so one
+    window task sorts half the input (SCALE.md §"Whale-key as-of
+    evidence")."""
     from pyspark.sql import functions as F
 
     from apollon_spark.operators.asof import asof_join
@@ -132,10 +130,8 @@ def _asof_skew(spark, sf_dir: str, strategy: str):
                      F.unix_micros(F.col("ts").cast("timestamp"))
                      .alias("rt"),
                      F.round("value", 6).alias("purchase_value")))
-    kw = {"bucket_width": 3_600_000_000.0} if strategy == "bucketed" else {}
     return asof_join(clicks, purch, on="t_us", right_on="rt",
-                     by="user_id", value_cols=["purchase_value"],
-                     strategy=strategy, **kw)
+                     by="user_id", value_cols=["purchase_value"])
 
 
 def bench_queries(spark, sf_dir: str) -> dict[str, float]:
@@ -145,8 +141,8 @@ def bench_queries(spark, sf_dir: str) -> dict[str, float]:
     # covers both signature families — comparable-subset subtotals
     # account for it below)
     names = ["docs_profile", "tumbling", "segment_meta", "seg_energy",
-             "asof_union", "asof_bucketed", "sessionize", "locf",
-             "lag_delta", "minhash", "knn_cosine",
+             "asof_union", "sessionize", "locf", "lag_delta",
+             "minhash", "knn_cosine",
              "cosine_neardup_lsh", "text_profile", "tpch_q1",
              "topk_orders", "join_revenue",
              "features_battery", "features_split", "onsets",
@@ -162,14 +158,13 @@ def bench_queries(spark, sf_dir: str) -> dict[str, float]:
     # delta), nonlinear is newly timed (value-oracled late r04) and
     # excluded from every comparable subtotal below.
     qs = entrymod.queries()
-    # the registry consolidated near-duplicate gates (asof strategies
-    # r02; cosine_neardup_lsh -> cosine_neardup and ann_rerank ->
-    # ann_lsh r04, to stay within the 50-gate cap); the bench keeps
+    # the registry consolidated near-duplicate gates
+    # (cosine_neardup_lsh -> cosine_neardup and ann_rerank -> ann_lsh
+    # r04, to stay within the 50-gate cap); the bench keeps
     # timing every half separately so per-query comparisons across
     # rounds stay name-for-name. ann_lsh here is the PRE-merge topk
     # pipeline, matching its r02/r03 timings.
     qs = {**qs, "asof_union": entrymod._q_asof_union,
-          "asof_bucketed": entrymod._q_asof_bucketed,
           "cosine_neardup_lsh": entrymod._q_cosine_neardup_lsh,
           "cosine_semantic": entrymod._q_cosine_semantic,
           "ann_rerank": entrymod._q_ann_rerank,
@@ -191,10 +186,7 @@ def bench_queries(spark, sf_dir: str) -> dict[str, float]:
     # policy as the features bench
     n_runs = max(1, int(os.environ.get("BENCH_QUERY_RUNS", 4)))
     out = {}
-    skew_entries = {
-        "asof_skew_union": lambda s, d: _asof_skew(s, d, "union"),
-        "asof_skew_bucketed": lambda s, d: _asof_skew(s, d, "bucketed"),
-    }
+    skew_entries = {"asof_skew_union": _asof_skew}
     for name in names + list(skew_entries):
         fn = skew_entries.get(name) or qs[name]
         best = None
@@ -226,9 +218,9 @@ def main() -> None:
     # alongside the full total
     R02_ADDED = {"ann_lsh", "ivf_ann", "lsh_pairs", "battery_time",
                  "bmu_fixed", "hmm"}
-    R03_ADDED = {"ann_rerank", "asof_skew_union", "asof_skew_bucketed",
-                 "pack_sequences", "contamination", "sample_stratified",
-                 "vocab_topk", "dup_clusters"}
+    R03_ADDED = {"ann_rerank", "asof_skew_union", "pack_sequences",
+                 "contamination", "sample_stratified", "vocab_topk",
+                 "dup_clusters"}
     # Gates that absorbed NEW work in r03 (docs_profile += repetition
     # metrics; locf += edge-clip/limit columns; lag_delta += delay-
     # embed columns; text_profile += four scrub regexp_replace passes

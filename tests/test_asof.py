@@ -1,4 +1,4 @@
-"""As-of join: all three strategies vs a local pandas oracle."""
+"""As-of join (the union sort-merge) vs a local pd.merge_asof oracle."""
 import numpy as np
 import pandas as pd
 import pytest
@@ -11,7 +11,7 @@ from apollon_spark.operators.asof import asof_join
 def tables(spark):
     rng = np.random.default_rng(42)
     n_l, n_r = 800, 300
-    # hot key 'k0' holds half the rows — exercises the salting path
+    # hot key 'k0' holds half the rows — one window task sorts half
     keys_l = np.where(rng.random(n_l) < 0.5, "k0",
                       np.char.add("k", rng.integers(1, 6, n_l).astype(str)))
     keys_r = np.where(rng.random(n_r) < 0.5, "k0",
@@ -48,16 +48,10 @@ def _got(df):
             [["key", "t", "lval", "rval", "rtag"]])
 
 
-@pytest.mark.parametrize("strategy,kwargs", [
-    ("union", {}),
-    ("bucketed", {"bucket_width": 1000.0}),
-    ("pandas", {}),
-])
-def test_asof_matches_oracle(spark, tables, strategy, kwargs):
+def test_asof_matches_oracle(spark, tables):
     left, right, lpdf, rpdf = tables
     got = _got(asof_join(left, right, on="t", right_on="rt", by="key",
-                         value_cols=["rval", "rtag"], strategy=strategy,
-                         **kwargs))
+                         value_cols=["rval", "rtag"]))
     want = _oracle(lpdf, rpdf)
     pd.testing.assert_frame_equal(got, want, check_dtype=False)
 
@@ -78,11 +72,10 @@ def test_asof_tolerance(spark, tables):
     pd.testing.assert_frame_equal(got, want, check_dtype=False)
 
 
-def test_asof_bucketed_tolerance_and_strict(spark, tables):
+def test_asof_tolerance_and_strict(spark, tables):
     left, right, lpdf, rpdf = tables
     got = _got(asof_join(left, right, on="t", right_on="rt", by="key",
-                         value_cols=["rval", "rtag"], strategy="bucketed",
-                         bucket_width=512.0, allow_exact=False,
+                         value_cols=["rval", "rtag"], allow_exact=False,
                          tolerance=700.0))
     want = _oracle(lpdf, rpdf, allow_exact=False, tolerance=700)
     pd.testing.assert_frame_equal(got, want, check_dtype=False)
@@ -93,18 +86,16 @@ def test_asof_no_match_rows_survive(spark):
         pd.DataFrame({"key": ["a", "a"], "t": [1, 100], "lval": [1.0, 2.0]}))
     right = spark.createDataFrame(
         pd.DataFrame({"key": ["a"], "rt": [50], "rval": [9.0]}))
-    for strategy, kw in [("union", {}), ("bucketed", {"bucket_width": 10.0}),
-                         ("pandas", {})]:
-        got = asof_join(left, right, on="t", right_on="rt", by="key",
-                        strategy=strategy, **kw).toPandas().sort_values("t")
-        assert len(got) == 2
-        assert np.isnan(got.iloc[0]["rval"])
-        assert got.iloc[1]["rval"] == 9.0
+    got = asof_join(left, right, on="t", right_on="rt", by="key") \
+        .toPandas().sort_values("t")
+    assert len(got) == 2
+    assert np.isnan(got.iloc[0]["rval"])
+    assert got.iloc[1]["rval"] == 9.0
 
 
 # ---------------------------------------------------------------------------
-# Property-based: strategies agree on adversarial inputs (ties,
-# negatives, bucket-boundary collisions, empty sides)
+# Property-based: the one path vs per-key pd.merge_asof on adversarial
+# inputs (left/right time ties, negatives, empty right sides)
 # ---------------------------------------------------------------------------
 
 from hypothesis import HealthCheck, given, settings
@@ -116,12 +107,9 @@ from hypothesis import strategies as st
 @given(
     lts=st.lists(st.integers(-50, 50), min_size=1, max_size=25),
     rts=st.lists(st.integers(-50, 50), min_size=0, max_size=25),
-    width=st.sampled_from([1.0, 7.0, 25.0, 1000.0]),
     allow_exact=st.booleans(),
-    data=st.data(),
 )
-def test_asof_strategies_agree_property(spark, lts, rts, width,
-                                        allow_exact, data):
+def test_asof_matches_pandas_property(spark, lts, rts, allow_exact):
     keys = ["a", "b"]
     lpdf = pd.DataFrame({
         "key": [keys[i % 2] for i in range(len(lts))],
@@ -132,25 +120,30 @@ def test_asof_strategies_agree_property(spark, lts, rts, width,
         "rt": np.array(rts, dtype="int64"),
         "rval": np.arange(len(rts), dtype="float64")})
     # dedupe (key, rt): with timestamp ties the as-of "latest" row is
-    # ambiguous and strategies may legitimately pick different rows
+    # ambiguous (pandas breaks it by row position, a notion a
+    # distributed sort does not have)
     rpdf = rpdf.drop_duplicates(["key", "rt"])
     l = spark.createDataFrame(lpdf)
     r = spark.createDataFrame(rpdf) if len(rpdf) else \
         spark.createDataFrame(rpdf, schema="key string, rt long, rval double")
-    frames = {}
-    for strat, kw in [("union", {}), ("bucketed", {"bucket_width": width}),
-                      ("pandas", {})]:
-        out = asof_join(l, r, on="t", right_on="rt", by="key",
-                        allow_exact=allow_exact, strategy=strat, **kw)
-        frames[strat] = out.toPandas().sort_values(["key", "t", "eid"]) \
-            .reset_index(drop=True)[["key", "t", "eid", "rval"]]
-    pd.testing.assert_frame_equal(frames["union"], frames["pandas"])
-    pd.testing.assert_frame_equal(frames["bucketed"], frames["pandas"])
+    cols = ["key", "t", "eid", "rval"]
+    got = asof_join(l, r, on="t", right_on="rt", by="key",
+                    allow_exact=allow_exact).toPandas() \
+        .sort_values(["key", "t", "eid"]).reset_index(drop=True)[cols]
+    want = pd.concat([
+        pd.merge_asof(grp.sort_values("t"),
+                      rpdf[rpdf["key"] == key].sort_values("rt")
+                      [["rt", "rval"]],
+                      left_on="t", right_on="rt",
+                      allow_exact_matches=allow_exact)
+        for key, grp in lpdf.groupby("key")]) \
+        .sort_values(["key", "t", "eid"]).reset_index(drop=True)[cols]
+    pd.testing.assert_frame_equal(got, want)
 
 
 def test_asof_forward_matches_pandas(spark):
     """direction='forward' == pd.merge_asof(direction='forward') on a
-    random fixture, for both strategies and with tolerance."""
+    random fixture, without and with tolerance."""
     import numpy as np
     import pandas as pd
     from apollon_spark.operators.asof import asof_join
@@ -172,15 +165,12 @@ def test_asof_forward_matches_pandas(spark):
         direction="forward").sort_values("lid")
     left = spark.createDataFrame(lpdf)
     right = spark.createDataFrame(rpdf)
-    for strategy, kw in (("union", {}),
-                         ("bucketed", {"bucket_width": 100.0})):
-        got = asof_join(left, right, on="t", by="k", right_on="rt",
-                        value_cols=["val"], strategy=strategy,
-                        direction="forward", **kw) \
-            .toPandas().sort_values("lid")
-        np.testing.assert_allclose(
-            got["val"].to_numpy(dtype="float64"),
-            want["val"].to_numpy(dtype="float64"), equal_nan=True)
+    got = asof_join(left, right, on="t", by="k", right_on="rt",
+                    value_cols=["val"], direction="forward") \
+        .toPandas().sort_values("lid")
+    np.testing.assert_allclose(
+        got["val"].to_numpy(dtype="float64"),
+        want["val"].to_numpy(dtype="float64"), equal_nan=True)
 
     # forward + tolerance: matches further ahead than 50 are nulled
     want_tol = pd.merge_asof(
@@ -246,13 +236,13 @@ def test_asof_attaches_matched_row_verbatim_with_null_values(spark):
         "val": [7.0, np.nan, 5.0]})
     left, right = spark.createDataFrame(lpdf), spark.createDataFrame(rpdf)
     # backward at t=4 matches rt=3 whose val is NaN -> NaN, not 7.0
-    for strategy, kw in (("union", {}), ("bucketed", {"bucket_width": 4.0}),
-                         ("pandas", {})):
-        got = asof_join(left, right, on="t", by="k", right_on="rt",
-                        value_cols=["val"], strategy=strategy, **kw) \
-            .toPandas().sort_values("lid")
-        assert np.isnan(got.iloc[0]["val"]), strategy
-        assert got.iloc[1]["val"] == 5.0, strategy
+    got = asof_join(left, right, on="t", by="k", right_on="rt",
+                    value_cols=["val"]).toPandas().sort_values("lid")
+    want = pd.merge_asof(lpdf, rpdf, left_on="t", right_on="rt", by="k")
+    np.testing.assert_allclose(got["val"].to_numpy(),
+                               want["val"].to_numpy(), equal_nan=True)
+    assert np.isnan(got.iloc[0]["val"])
+    assert got.iloc[1]["val"] == 5.0
     # nearest at t=4: rt=3 (dist 1) beats rt=9 (dist 5); its val is NaN
     got_n = asof_join(left, right, on="t", by="k", right_on="rt",
                       value_cols=["val"], direction="nearest") \

@@ -58,10 +58,9 @@ def test_relational_ops_empty(spark, empty_events):
     right = empty_events.select(
         "user_id", F.unix_micros(F.col("ts").cast("timestamp")).alias("rt"),
         F.col("value"))
-    for strategy, kw in (("union", {}), ("bucketed",
-                                         {"bucket_width": 1000.0})):
+    for direction in ("backward", "forward", "nearest"):
         out = asof_join(left, right, on="t", right_on="rt", by="user_id",
-                        strategy=strategy, **kw)
+                        direction=direction)
         assert out.count() == 0
     assert sessionize(
         left.withColumnRenamed("t", "t_us"), on="t_us",

@@ -4,7 +4,8 @@ import pandas as pd
 
 from apollon_spark.datagen import synth_docs_bursts
 from apollon_spark.onsets import (by_onsets_gather, detect_onsets,
-                                  log_attack_time, pick_peaks_series)
+                                  flux_odf, log_attack_time, pick_peaks,
+                                  pick_peaks_series)
 from apollon_spark.operators.framing import FramingParams
 from apollon_spark.spectral import FeatureConfig
 
@@ -55,13 +56,16 @@ def test_flux_onsets_recall_on_bursts(spark):
 
 
 def test_fused_equals_composed(spark):
+    """detect_onsets (one fused stage) == the composed reference
+    pick_peaks(flux_odf(...))."""
     docs = synth_docs_bursts(spark, 5, n_tok=4096, n_bursts=3,
                              burst_len=512)
     cfg = FeatureConfig(framing=FramingParams(128, 64))
     kw = dict(n_before=3, n_after=3, delta=0.05)
-    fused = detect_onsets(docs, cfg, fused=True, **kw).toPandas() \
+    fused = detect_onsets(docs, cfg, **kw).toPandas() \
         .sort_values(["doc_id", "frame"]).reset_index(drop=True)
-    comp = detect_onsets(docs, cfg, fused=False, **kw).toPandas() \
+    comp = pick_peaks(flux_odf(docs, cfg), **kw) \
+        .select("doc_id", "frame", "time").toPandas() \
         .sort_values(["doc_id", "frame"]).reset_index(drop=True)
     pd.testing.assert_frame_equal(fused, comp)
 
@@ -100,9 +104,10 @@ def test_fused_equals_composed_causal(spark):
                              burst_len=512)
     cfg = FeatureConfig(framing=FramingParams(128, 64), causal=True)
     kw = dict(n_before=3, n_after=3, delta=0.05)
-    fused = detect_onsets(docs, cfg, fused=True, **kw).toPandas() \
+    fused = detect_onsets(docs, cfg, **kw).toPandas() \
         .sort_values(["doc_id", "frame"]).reset_index(drop=True)
-    comp = detect_onsets(docs, cfg, fused=False, **kw).toPandas() \
+    comp = pick_peaks(flux_odf(docs, cfg), **kw) \
+        .select("doc_id", "frame", "time").toPandas() \
         .sort_values(["doc_id", "frame"]).reset_index(drop=True)
     pd.testing.assert_frame_equal(fused, comp)
 

@@ -282,3 +282,21 @@ def test_cluster_and_group_canonical_picks_are_aggregates(spark):
     for line in plan.splitlines():
         if "windowspecdefinition" in line:
             assert "group_id" not in line, line
+
+
+@pytest.mark.parametrize("kw", [
+    {}, {"direction": "nearest"}, {"tolerance": 5.0},
+    {"direction": "forward"}])
+def test_asof_join_is_one_exchange(spark, kw):
+    """The as-of join is one hash exchange on ``by`` feeding one window
+    sort: nearest fills both directions from the same partitioning,
+    forward is time negation and tolerance a projection — none may add
+    a second shuffle."""
+    from apollon_spark.operators.asof import asof_join
+    left = spark.createDataFrame(pd.DataFrame({
+        "key": ["a", "b", "a"], "t": [1, 5, 9], "lval": [0.1, 0.2, 0.3]}))
+    right = spark.createDataFrame(pd.DataFrame({
+        "key": ["a", "b"], "rt": [2, 4], "rval": [1.0, 2.0]}))
+    plan = _plan(asof_join(left, right, on="t", right_on="rt", by="key",
+                           **kw))
+    assert plan.count("Exchange hashpartitioning") == 1, plan

@@ -176,3 +176,21 @@ def test_vn_neighbourhood_empty_flat():
     assert som.vn_neighbourhood(0, 0, 1, 1) == []
     flat = som.vn_neighbourhood(0, 0, 1, 1, flat=True)
     assert len(flat) == 0
+
+
+def test_assign_bmu_round_scale_is_half_up(spark):
+    """round_scale rounds half-up like the DuckDB oracle's round(), not
+    half-to-even like np.round. Unit 0 sits at a planted 2.5e-6
+    distance, unit 1 at 2.2e-6: half-even rounds both to 2e-6 and the
+    unit tiebreak picks 0; half-up rounds unit 0 to 3e-6 and picks 1."""
+    import duckdb
+    import pandas as pd
+    weights = np.array([[2.5e-6], [-2.2e-6]])
+    df = spark.createDataFrame(pd.DataFrame({
+        "vec_id": [0], "vec": [np.array([0.0])]}))
+    got = som.assign_bmu(df, "vec", weights, round_scale=6).collect()[0]
+    want = duckdb.sql("SELECT round(2.5e-6::DOUBLE, 6) AS d0, "
+                      "round(2.2e-6::DOUBLE, 6) AS d1").fetchone()
+    assert want == (3e-6, 2e-6)
+    assert got["bmu"] == 1
+    assert got["bmu_dist"] == want[1]
