@@ -1096,9 +1096,17 @@ def _q_similarity_position(spark, sf_dir):
         F.array("g00_2", "g01_2", "g10_2", "g11_2").alias("gamma_flat"))
     desc = desc.cache()
     import numpy as np
-    w0 = np.array([r["gamma_flat"] for r in
-                   desc.orderBy("doc_id").limit(9).collect()], "float64")
     p = SomParams(3, 3, n_iter=2, metric="hellinger")
+    n_units = p.n_rows * p.n_cols
+    w0 = np.array([r["gamma_flat"] for r in
+                   desc.orderBy("doc_id").limit(n_units).collect()],
+                  "float64")
+    if len(w0) < n_units:
+        # the oracle's w0t raises on the same condition
+        desc.unpersist()
+        raise ValueError(
+            f"similarity_position needs at least {n_units} descriptor "
+            f"docs (one per SOM unit), got {len(w0)}")
     weights, _ = fit_batch_som(desc, "gamma_flat", p, w0=w0)
     out = assign_bmu(desc, "gamma_flat", weights, metric="hellinger",
                      round_scale=6)
@@ -2381,7 +2389,8 @@ def _similarity_sql(n_rows: int = 3, n_cols: int = 3,
     the old weight (the som_train device, re-derived for the
     4-dim Γ space), final pass = bmu_fixed's argmin + rounded
     distance. Init weights = the 9 lexicographically-first docs'
-    descriptors, derived in SQL."""
+    descriptors, derived in SQL; fewer descriptor docs than units is
+    an ``error()``, as it is a ValueError on the Spark side."""
     from apollon_spark.som import (SomGrid, SomParams, _decay_radius,
                                    gauss_kernel, grid_dists)
     p = SomParams(n_rows, n_cols, n_iter=n_iter, metric="hellinger")
@@ -2411,7 +2420,10 @@ def _similarity_sql(n_rows: int = 3, n_cols: int = 3,
 w0t AS (
   SELECT * FROM (SELECT row_number() OVER (ORDER BY doc_id) - 1 AS unit,
                         a0 AS c0, a1 AS c1, a2 AS c2, a3 AS c3
-                 FROM descs) WHERE unit < {n_units})""")
+                 FROM descs) WHERE unit < {n_units}
+    AND (SELECT CASE WHEN count(*) < {n_units} THEN error(
+           'similarity_position needs at least {n_units} descriptor '
+           || 'docs (one per SOM unit)') ELSE true END FROM descs))""")
     for e in range(n_iter):
         parts.append(f"""
 d{e} AS (SELECT d.doc_id, w.unit, {hd('d.a', 'w.c')} AS dist

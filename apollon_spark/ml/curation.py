@@ -500,16 +500,18 @@ def ngram_lm_score(docs: DataFrame, ref: DataFrame,
     The V² bound says nothing about the OBSERVED-bigram blowup
     (VERDICT r04 #5): a 100k-token vocab reference slice can carry
     hundreds of millions of distinct bigrams — far past any sane
-    broadcast. The model size is therefore PROBED (one count over
-    the model-sized aggregate, paid on the small reference side) and
-    above ``broadcast_threshold`` rows the joins fall back to plain
-    shuffle equi-joins on gram/ctx — the corpus side already carries
-    both keys, so the fallback costs one hash exchange of keys-only
-    gram rows, not a plan change. The default threshold (20M rows ≈
-    a few hundred MB as a broadcast hashmap) stays well under
-    executor-memory pressure at 1000-executor scale; the unigram
-    table is probed independently (it is ctx-distinct-bounded and
-    usually still broadcastable when the bigram table is not).
+    broadcast. The model size is therefore PROBED, so CALLING this
+    function runs a Spark action: one aggregate over the pinned
+    bigram model (paid on the small reference side) counts its rows
+    and its distinct contexts. Above ``broadcast_threshold`` rows the
+    joins fall back to plain shuffle equi-joins on gram/ctx — the
+    corpus side already carries both keys, so the fallback costs one
+    hash exchange of keys-only gram rows, not a plan change. The
+    default threshold (20M rows ≈ a few hundred MB as a broadcast
+    hashmap) stays well under executor-memory pressure at
+    1000-executor scale; the unigram table is sized by its distinct
+    contexts, which usually keep it broadcastable when the bigram
+    table is not.
     """
     if not 0 < alpha:
         raise ValueError("alpha must be positive")
@@ -528,8 +530,8 @@ def ngram_lm_score(docs: DataFrame, ref: DataFrame,
     # ctx via integer division (`div`): a double roundtrip would lose
     # exactness once gram exceeds 2^53 (large-V packings)
     # the model is PINNED (lazy localCheckpoint, materialized by the
-    # probe count below): it is consumed up to four times — size
-    # probe(s), the uni_ref derivation, and both join sides — and
+    # size probe below): it is consumed up to four times — size
+    # probe, the uni_ref derivation, and both join sides — and
     # unlike the exploded passage-window table (SCALE.md §6f) it is
     # model-sized, far below its own build cost, so pinning wins
     bi_ref = (_bigrams(ref)
@@ -545,12 +547,16 @@ def ngram_lm_score(docs: DataFrame, ref: DataFrame,
         (F.coalesce(F.col("c2"), F.lit(0)).cast("double") + alpha)
         / (F.coalesce(F.col("c1"), F.lit(0)).cast("double")
            + alpha * vocab_size))
+    # one probe job sizes both tables: uni_ref has one row per
+    # distinct context of the bigram model
+    n_bi, n_ctx = bi_ref.select(
+        F.count("*"), F.countDistinct(F.expr(f"gram div {V}"))).first()
     bi_side = bi_ref
     uni_side = uni_ref
-    if bi_ref.count() <= broadcast_threshold:
+    if n_bi <= broadcast_threshold:
         bi_side = F.broadcast(bi_ref)
         uni_side = F.broadcast(uni_ref)
-    elif uni_ref.count() <= broadcast_threshold:
+    elif n_ctx <= broadcast_threshold:
         uni_side = F.broadcast(uni_ref)
     scored = (grams
               .join(bi_side, "gram", "left")

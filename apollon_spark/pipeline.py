@@ -3,15 +3,26 @@ resume (north rule, SURVEY §7.1 M6).
 
 Work is partitioned into ``n_buckets`` deterministic doc_id-hash
 buckets (independent of Spark's physical partitioning, so resume
-semantics survive cluster-size changes). Each bucket:
+semantics survive cluster-size changes). Buckets whose
+``_done/bucket=K`` marker exists (under the same params hash) are
+skipped instantly; every pending bucket is one unit of work:
 
-  1. is skipped instantly if its ``_done/bucket=K`` marker exists,
-  2. otherwise runs the stage's transform on its doc slice,
-  3. writes output parquet under ``out/<job_id>/bucket=K/``,
-  4. emits a lineage+metrics record (rows in/out, output checksum,
-     wall seconds, params hash) under ``out/_lineage/``,
+  1. runs the stage's transform on its doc slice, counting the rows
+     it reads with a ``pyspark.sql.Observation`` (no count job),
+  2. writes output parquet under ``out/<job_id>/bucket=K/``,
+  3. reads the parquet back for rows out and an output checksum,
+  4. emits a lineage+metrics record (rows in/out, checksum, wall
+     seconds, params hash) under ``out/_lineage/``,
   5. commits the marker last — a crash before the marker reruns the
      bucket; the rerun overwrites the same paths (idempotent).
+
+Pending buckets are in flight together, on up to
+``defaultParallelism`` driver threads. Spark's FIFO scheduler still
+serves earlier buckets first; later ones only fill cores a straggler
+leaves idle. A bucket's ``wall_sec`` therefore overlaps other
+buckets' and does not sum to the job's wall time. After the first
+bucket error no further bucket starts; those in flight finish and
+commit their markers, then that error is re-raised.
 
 ``run_bucketed_job`` is the generic harness — valid for any PER-DOC
 transform (feature battery, HMM fits, E-step decode, text profiling,
@@ -29,11 +40,13 @@ import hashlib
 import json
 import os
 import time
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import asdict
 from typing import Callable
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 from .operators.framing import FramingParams
 from .spectral import FeatureConfig, extract_features
@@ -72,6 +85,8 @@ def run_bucketed_job(spark: SparkSession, docs: DataFrame, out_dir: str,
     it changes which docs land in which bucket file, so resuming under
     a different bucket count against old markers would duplicate every
     doc whose crc32 slice moved — the markers must invalidate.
+    ``transform`` must stay lazy (run no action on its input): the
+    write is the action that fulfils the bucket's rows-in Observation.
     """
     phash = _params_hash({**params, "n_buckets": n_buckets})
     checksum_col = checksum_col or _generic_checksum_col
@@ -89,9 +104,9 @@ def run_bucketed_job(spark: SparkSession, docs: DataFrame, out_dir: str,
     summary = {"buckets_done": 0, "buckets_skipped": 0, "rows_out": 0,
                "params_hash": phash}
 
+    pending = []
     for k in range(n_buckets):
         marker = os.path.join(done_dir, f"bucket={k}")
-        out_path = os.path.join(out_dir, job_id, f"bucket={k}")
         if os.path.exists(marker):
             # skip ONLY if the marker was committed under the same
             # params — a marker from a different cfg means the parquet
@@ -100,11 +115,18 @@ def run_bucketed_job(spark: SparkSession, docs: DataFrame, out_dir: str,
                 if fh.read().strip() == phash:
                     summary["buckets_skipped"] += 1
                     continue
+        pending.append(k)
+
+    def run_bucket(k: int) -> int:
         t0 = time.time()
-        part = docs.where(F.col("_bucket") == k).drop("_bucket")
-        rows_in = part.count()
-        out = transform(part)
-        out.write.mode("overwrite").parquet(out_path)
+        out_path = os.path.join(out_dir, job_id, f"bucket={k}")
+        # one Observation per bucket run (each fulfils once): the
+        # write job counts the rows read, so no separate count job
+        seen = Observation()
+        part = (docs.where(F.col("_bucket") == k).drop("_bucket")
+                .observe(seen, F.count(F.lit(1)).alias("rows_in")))
+        transform(part).write.mode("overwrite").parquet(out_path)
+        # rows out and checksum come from what is on disk
         written = spark.read.parquet(out_path)
         agg = written.select(
             F.count("*").alias("n"),
@@ -112,17 +134,41 @@ def run_bucketed_job(spark: SparkSession, docs: DataFrame, out_dir: str,
         rows_out, checksum = int(agg["n"]), float(agg["cs"] or 0.0)
         record = {
             "job_id": job_id, "bucket": k, "params_hash": phash,
-            "rows_in": rows_in, "rows_out": rows_out,
+            "rows_in": int(seen.get["rows_in"]), "rows_out": rows_out,
             "checksum": checksum, "wall_sec": round(time.time() - t0, 3),
             "out_path": out_path,
         }
         with open(os.path.join(lineage_dir, f"bucket_{k}.json"), "w") as fh:
             json.dump(record, fh)
         # marker LAST: the commit point for this bucket
-        with open(marker, "w") as fh:
+        with open(os.path.join(done_dir, f"bucket={k}"), "w") as fh:
             fh.write(phash)
-        summary["buckets_done"] += 1
-        summary["rows_out"] += rows_out
+        return rows_out
+
+    # the first failure stops buckets that have not started yet; those
+    # in flight run to their marker, then that failure is re-raised
+    failed: list[BaseException] = []
+
+    def guarded(k: int) -> int | None:
+        if failed:
+            return None
+        try:
+            return run_bucket(k)
+        except BaseException as exc:
+            failed.append(exc)
+            raise
+
+    if pending:
+        n_threads = min(len(pending), spark.sparkContext.defaultParallelism)
+        with ThreadPoolExecutor(n_threads) as pool:
+            # wrapped per bucket, in this thread: each bucket gets its
+            # own copy of the caller's job group, description and tags
+            futures = [pool.submit(inheritable_thread_target(spark)(guarded),
+                                   k) for k in pending]
+        if failed:
+            raise failed[0]
+        summary["buckets_done"] = len(futures)
+        summary["rows_out"] = sum(fut.result() for fut in futures)
     # a PREVIOUS run with more buckets leaves bucket dirs beyond
     # n_buckets - 1 holding docs this run re-wrote into lower buckets;
     # reading out/<job_id> as one dataset would then duplicate them —

@@ -10,8 +10,9 @@ weighted mean ``w_u = sum_i h(bmu_i, u) x_i / sum_i h(bmu_i, u)``.
 
 Distribution: weights are a small (n_units x dim) matrix broadcast to
 executors each epoch; one ``mapInPandas`` pass computes per-partition
-partials ``(sum h.x, sum h)`` per unit; the driver combines and
-updates. An epoch is one scan — no shuffle.
+partials ``(sum h.x, sum h)`` for every unit, one row per
+partition; the driver sums them and updates. An epoch is one scan
+and one job — no shuffle.
 
 A driver-side ``incremental_fit`` reproduces the reference's exact
 sequential semantics (fixed np.random.seed(10), som/som.py:327) for
@@ -262,7 +263,7 @@ def fit_batch_som(vectors: DataFrame, vec_col: str, p: SomParams,
     spark = vectors.sparkSession
     qerrors: list[float] = []
 
-    partial_schema = ("unit int, wsum array<double>, hsum double, "
+    partial_schema = ("wsum array<double>, hsum array<double>, "
                       "qerr double, n long")
 
     for epoch in range(p.n_iter):
@@ -285,26 +286,23 @@ def fit_batch_som(vectors: DataFrame, vec_col: str, p: SomParams,
                 den += hh.sum(axis=0)
                 qe += float(dist.sum())
                 n += len(x)
-            qcol = np.zeros(w_.shape[0])
-            ncol = np.zeros(w_.shape[0], dtype="int64")
-            qcol[0], ncol[0] = qe, n          # partition totals on unit 0
-            yield pd.DataFrame({
-                "unit": np.arange(w_.shape[0], dtype="int32"),
-                "wsum": list(num), "hsum": den, "qerr": qcol, "n": ncol})
+            # one row per partition: the whole (n_units x d) partial
+            yield pd.DataFrame({"wsum": [num.ravel()], "hsum": [den],
+                                "qerr": [qe], "n": [n]})
 
-        parts = vectors.select(vec_col).mapInPandas(gen, partial_schema)
-        agg = (parts.groupBy("unit")
-               .agg(F.array(*[
-                    F.sum(F.element_at("wsum", i + 1)) for i in range(d)
-                    ]).alias("wsum"),
-                    F.sum("hsum").alias("hsum"),
-                    F.sum("qerr").alias("qerr"),
-                    F.sum("n").alias("n"))
-               .orderBy("unit").collect())
-        num = np.stack([np.array(r["wsum"]) for r in agg])
-        den = np.array([r["hsum"] for r in agg])
-        total_q = sum(r["qerr"] for r in agg)
-        total_n = sum(r["n"] for r in agg)
+        # one job per epoch: the driver sums the partition partials in
+        # partition order (collect keeps it), so a fit is a
+        # deterministic function of the input and its partitioning
+        partials = (vectors.select(vec_col)
+                    .mapInPandas(gen, partial_schema).collect())
+        num = np.zeros((n_units, d))
+        den = np.zeros(n_units)
+        total_q, total_n = 0.0, 0
+        for r in partials:
+            num += np.asarray(r["wsum"]).reshape(n_units, d)
+            den += np.asarray(r["hsum"])
+            total_q += r["qerr"]
+            total_n += r["n"]
         mask = den > 0
         weights = np.where(mask[:, None], num / np.maximum(den, 1e-300)[:, None],
                            weights)

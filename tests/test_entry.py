@@ -123,3 +123,22 @@ def test_literal_oracle_values_are_bit_exact(spark, sf_dir, ddb):
         lit = entrymod._planes_literal(planes)
         flat = ddb.execute(f"SELECT {lit}::DOUBLE[][]").fetchone()[0]
         assert [x for row in flat for x in row] == planes.ravel().tolist()
+
+
+def test_similarity_position_too_few_docs_fails_on_both_sides(
+        spark, sf_dir, tmp_path):
+    """Fewer descriptor docs than the 3x3 SOM's 9 units: the Spark
+    gate raises a ValueError before the fit, and the DuckDB oracle
+    raises from its init-weights CTE instead of fitting fewer units."""
+    tiny = str(tmp_path)
+    con = duckdb.connect()
+    con.execute(
+        f"COPY (SELECT * FROM read_parquet('{sf_dir}/documents.parquet') "
+        f"ORDER BY doc_id LIMIT 4) TO '{tiny}/documents.parquet' "
+        f"(FORMAT parquet)")
+    with pytest.raises(ValueError, match="at least 9 descriptor docs"):
+        entrymod.queries()["similarity_position"](spark, tiny)
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM "
+                f"read_parquet('{tiny}/documents.parquet')")
+    with pytest.raises(duckdb.Error, match="at least 9 descriptor docs"):
+        con.execute(entrymod.oracle_sql()["similarity_position"]).fetchdf()

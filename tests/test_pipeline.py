@@ -2,6 +2,7 @@
 import os
 
 import numpy as np
+import pytest
 
 from apollon_spark.datagen import synth_docs
 from apollon_spark.operators.framing import FramingParams
@@ -10,15 +11,25 @@ from apollon_spark.spectral import FeatureConfig
 
 
 def test_run_and_resume(spark, tmp_path):
-    out = str(tmp_path / "job")
+    # 12 buckets over 8 docs leaves some buckets empty: they still
+    # run, write and record rows_in 0
+    for n_buckets in (4, 12):
+        _run_and_resume(spark, str(tmp_path / f"job{n_buckets}"),
+                        n_buckets)
+
+
+def _run_and_resume(spark, out, n_buckets):
     docs = synth_docs(spark, 8, whales=False)
     cfg = FeatureConfig(framing=FramingParams(128, 64))
 
-    s1 = run_feature_job(spark, docs, out, cfg, n_buckets=4)
-    assert s1["buckets_done"] == 4 and s1["buckets_skipped"] == 0
+    s1 = run_feature_job(spark, docs, out, cfg, n_buckets=n_buckets)
+    assert s1["buckets_done"] == n_buckets and s1["buckets_skipped"] == 0
     lineage = read_lineage(out)
-    assert len(lineage) == 4
+    assert len(lineage) == n_buckets
     assert sum(r["rows_in"] for r in lineage) == 8
+    if n_buckets > 8:
+        assert any(r["rows_in"] == 0 for r in lineage)
+    assert all(r["rows_out"] == 0 for r in lineage if r["rows_in"] == 0)
     assert all(r["wall_sec"] > 0 for r in lineage)
     assert all(r["params_hash"] == s1["params_hash"] for r in lineage)
 
@@ -27,27 +38,122 @@ def test_run_and_resume(spark, tmp_path):
     assert n_rows == s1["rows_out"] > 0
 
     # resume: everything skips, output unchanged
-    s2 = run_feature_job(spark, docs, out, cfg, n_buckets=4)
-    assert s2["buckets_done"] == 0 and s2["buckets_skipped"] == 4
+    s2 = run_feature_job(spark, docs, out, cfg, n_buckets=n_buckets)
+    assert s2["buckets_done"] == 0 and s2["buckets_skipped"] == n_buckets
     assert spark.read.parquet(os.path.join(out, "features")).count() == n_rows
 
     # partial failure: drop one marker -> exactly one bucket reruns,
     # same checksum as before (idempotent)
     before = {r["bucket"]: r["checksum"] for r in lineage}
     os.remove(os.path.join(out, "_done", "bucket=2"))
-    s3 = run_feature_job(spark, docs, out, cfg, n_buckets=4)
-    assert s3["buckets_done"] == 1 and s3["buckets_skipped"] == 3
+    s3 = run_feature_job(spark, docs, out, cfg, n_buckets=n_buckets)
+    assert s3["buckets_done"] == 1 and s3["buckets_skipped"] == n_buckets - 1
     after = {r["bucket"]: r["checksum"] for r in read_lineage(out)}
     assert after == before
 
     # changed params: markers from the old cfg must NOT be trusted —
     # every bucket reruns under the new hash (stale-resume bug, r02)
     cfg2 = FeatureConfig(framing=FramingParams(64, 32))
-    s4 = run_feature_job(spark, docs, out, cfg2, n_buckets=4)
+    s4 = run_feature_job(spark, docs, out, cfg2, n_buckets=n_buckets)
     assert s4["params_hash"] != s1["params_hash"]
-    assert s4["buckets_done"] == 4 and s4["buckets_skipped"] == 0
+    assert s4["buckets_done"] == n_buckets and s4["buckets_skipped"] == 0
     assert all(r["params_hash"] == s4["params_hash"]
                for r in read_lineage(out))
+
+
+def _text_docs(spark, ids):
+    import pandas as pd
+    return spark.createDataFrame(pd.DataFrame({
+        "doc_id": ids,
+        "text": [f"some text for {i} with words" for i in ids],
+    }))
+
+
+def test_bucketed_job_runs_no_count_job(spark, tmp_path, monkeypatch):
+    """rows_in comes from an Observation on the bucket's write job, not
+    from a count() action per bucket."""
+    from apollon_spark.ml.textstats import text_profile
+    from apollon_spark.pipeline import run_bucketed_job
+    docs = _text_docs(spark, [f"d{i}" for i in range(12)])
+
+    def no_count(self):
+        raise AssertionError("run_bucketed_job ran a count() job")
+
+    monkeypatch.setattr(type(docs), "count", no_count)
+    s = run_bucketed_job(spark, docs, str(tmp_path / "tp"), text_profile,
+                         {"stage": "textstats"}, n_buckets=3,
+                         job_id="textstats")
+    assert s["buckets_done"] == 3 and s["rows_out"] == 12
+    assert sum(r["rows_in"] for r in read_lineage(str(tmp_path / "tp"))) \
+        == 12
+
+
+def test_crash_mid_bucket_resume(spark, tmp_path, monkeypatch):
+    """A bucket that dies after its parquet write but before its marker,
+    and a bucket whose Spark job fails, both leave no marker; the error
+    propagates. The rerun redoes only those buckets, its lineage
+    checksums equal a clean run's, and no doc is written twice."""
+    import json
+    import types
+    import zlib
+
+    from pyspark.sql import functions as F
+
+    from apollon_spark import pipeline
+    from apollon_spark.ml.textstats import text_profile
+    n_buckets = 4
+    ids = [f"d{i}" for i in range(12)]
+    poison = "poison"
+    poison_bucket = zlib.crc32(poison.encode()) % n_buckets
+    crash_bucket = (poison_bucket + 1) % n_buckets
+    params = {"stage": "textstats"}
+
+    def tf(part):
+        # fails the Spark job of the bucket holding the planted doc
+        ok = F.when(F.col("doc_id") == poison,
+                    F.raise_error(F.lit("planted bad doc"))) \
+            .otherwise(F.lit(True))
+        return text_profile(part.where(ok))
+
+    def run(docs, out):
+        return pipeline.run_bucketed_job(spark, docs, out, tf, params,
+                                         n_buckets=n_buckets,
+                                         job_id="textstats")
+
+    clean = str(tmp_path / "clean")
+    run(_text_docs(spark, ids), clean)
+    want = {r["bucket"]: r["checksum"] for r in read_lineage(clean)}
+
+    def dump(record, fh):
+        if record["bucket"] == crash_bucket:
+            raise OSError("planted crash before the marker")
+        json.dump(record, fh)
+
+    out = str(tmp_path / "crashed")
+    with monkeypatch.context() as m:
+        m.setattr(pipeline, "json", types.SimpleNamespace(
+            dump=dump, dumps=json.dumps, load=json.load))
+        with pytest.raises(Exception) as err:
+            run(_text_docs(spark, ids + [poison]), out)
+    assert ("planted crash" in str(err.value)
+            or "planted bad doc" in str(err.value))
+    failed = {poison_bucket, crash_bucket}
+    done = set(range(n_buckets)) - failed
+    # every bucket was in flight at once, so the others ran to their
+    # markers; the failed ones have none
+    assert {int(n.split("=")[1]) for n in
+            os.listdir(os.path.join(out, "_done"))} == done
+    # the crashed bucket's parquet is on disk without a marker
+    assert os.path.isdir(os.path.join(out, "textstats",
+                                      f"bucket={crash_bucket}"))
+
+    s = run(_text_docs(spark, ids), out)
+    assert s["buckets_done"] == 2 and s["buckets_skipped"] == 2
+    got = {r["bucket"]: r["checksum"] for r in read_lineage(out)}
+    assert got == want
+    written = spark.read.parquet(os.path.join(out, "textstats"))
+    assert written.count() == written.select("doc_id").distinct().count() \
+        == len(ids)
 
 
 def test_generic_bucketed_job_resume(spark, tmp_path):

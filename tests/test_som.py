@@ -194,3 +194,28 @@ def test_assign_bmu_round_scale_is_half_up(spark):
     assert want == (3e-6, 2e-6)
     assert got["bmu"] == 1
     assert got["bmu_dist"] == want[1]
+
+
+def test_batch_som_partitioning_and_repeat_determinism(spark):
+    """fit_batch_som sums one partial per partition on the driver, in
+    partition order: a different partitioning changes only the float
+    summation order (weights agree to 1e-12), and two fits on one
+    partitioning are bit-identical."""
+    import pandas as pd
+    data = _clusters(400)
+    df = spark.createDataFrame(
+        pd.DataFrame({"vec_id": range(len(data)), "vec": list(data)}))
+    p = som.SomParams(4, 4, n_iter=5, init="rnd", seed=10)
+    one = df.coalesce(1).cache()
+    five = df.repartition(5, "vec_id").cache()
+    # init='rnd' samples rows via limit(): pin w0 so both partitionings
+    # start from the same weights
+    w0 = som.init_weights("rnd", (4, 4, 2), data, 10)
+    w1, q1 = som.fit_batch_som(one, "vec", p, w0=w0)
+    w5, q5 = som.fit_batch_som(five, "vec", p, w0=w0)
+    np.testing.assert_allclose(w1, w5, rtol=0, atol=1e-12)
+    np.testing.assert_allclose(q1, q5, rtol=0, atol=1e-12)
+    w5b, q5b = som.fit_batch_som(five, "vec", p, w0=w0)
+    assert w5.tobytes() == w5b.tobytes() and q5 == q5b
+    one.unpersist()
+    five.unpersist()
