@@ -259,12 +259,12 @@ def _q_asof_union(spark, sf_dir):
 
 def _q_dup_clusters(spark, sf_dir):
     """Dedup RESOLUTION: MinHash-LSH candidate pairs grouped into
-    duplicate clusters (connected components via min-label
-    propagation + pointer jumping) with one canonical doc kept per
-    cluster (largest n_tok, ties to smallest doc_id). Covers every
-    doc — docs in no pair are singleton clusters with keep=1. The
-    oracle re-derives the components with a recursive reachability
-    CTE over the same banded pairs."""
+    duplicate clusters (connected components via large-star/small-star
+    rounds, stopped when the edge set is an exact star forest) with one
+    canonical doc kept per cluster (largest n_tok, ties to smallest
+    doc_id). Covers every doc — docs in no pair are singleton
+    clusters with keep=1. The oracle re-derives the components with a
+    recursive reachability CTE over the same banded pairs."""
     from apollon_spark.ml.dedup import (lsh_candidate_pairs, minhash_docs,
                                         resolve_dup_clusters)
     docs = _docs(spark, sf_dir)
@@ -1277,8 +1277,8 @@ FROM banded a JOIN banded b
 def _dup_clusters_sql(n_bands: int = 4) -> str:
     """Recursive-reachability re-derivation of the dedup-resolution
     gate: banded MinHash pairs -> undirected edges -> per-node min
-    reachable id (= the component id the Spark min-label propagation
-    converges to) -> per-cluster canonical pick."""
+    reachable id (= the component id Spark's large-star/small-star
+    star forest is centered on) -> per-cluster canonical pick."""
     rows = _MINHASH_N // n_bands
     cte = _minhash_sigs_cte().replace("WITH ", "WITH RECURSIVE ", 1)
     return f"""

@@ -147,13 +147,6 @@ def main(argv: list[str] | None = None) -> int:
                          "corpus (every duplicated span removed except "
                          "one canonical occurrence — Lee et al. "
                          "keep-one semantics)")
-    ap.add_argument("--cc-algorithm", choices=["propagate", "star"],
-                    default="propagate",
-                    help="cluster: connected-components algorithm — "
-                         "'propagate' (min-label + pointer jumping; "
-                         "dedup graphs are shallow) or 'star' "
-                         "(large-star/small-star, O(log^2 n) rounds "
-                         "for adversarial long-chain graphs)")
     ap.add_argument("--input-format", choices=["table", "wav"],
                     default="table",
                     help="'table' = parquet/Iceberg docs table; 'wav' = "
@@ -256,13 +249,12 @@ def main(argv: list[str] | None = None) -> int:
             eligible = docs.where(F.size("tokens") >= args.shingle_k)
             sigs = minhash_docs(eligible, args.n_hashes, args.shingle_k)
             pairs = lsh_candidate_pairs(sigs, n_bands=args.n_bands)
-        out = resolve_dup_clusters(docs, pairs, id_col=id_col,
-                                   algorithm=args.cc_algorithm)
+        out = resolve_dup_clusters(docs, pairs, id_col=id_col)
         storage.write_table(out, args.output)
         written = storage.read_table(spark, args.output)
         n_docs, n_keep = written.select(
             F.count("*"), F.sum("keep")).first()
-        print(json.dumps({"docs": n_docs, "kept": int(n_keep)}))
+        print(json.dumps({"docs": n_docs, "kept": int(n_keep or 0)}))
     elif args.stage == "passages":
         # exact duplicate-passage spans (fixed-k substring dedup):
         # every position whose k-token window content appears in

@@ -888,88 +888,16 @@ def cosine_near_dups_lsh(vectors: DataFrame, id_col: str, vec_col: str,
 # ---------------------------------------------------------------------------
 
 def connected_components(pairs: DataFrame, max_iter: int = 25,
-                         algorithm: str = "propagate",
                          stats: dict | None = None) -> DataFrame:
     """Connected components over an undirected pair list
     (``id_a``, ``id_b``): returns (node, cluster_id) where cluster_id
     is the lexicographically smallest node id reachable from ``node``.
-    Only nodes that appear in a pair are returned.
+    Only nodes that appear in a pair are returned; a node seen only in
+    self-pairs is its own singleton.
 
-    ``algorithm="propagate"`` (default): iterative min-label
-    propagation with pointer jumping — each round every node takes the
-    min of its own label, its neighbors' labels, and its label's label
-    (path halving). Plain propagation needs O(diameter) rounds; the
-    pointer-jump join cuts that to O(log d). Near-dup components are
-    band-collision cliques, so observed convergence is 2-3 rounds.
-
-    ``algorithm="star"``: the large-star/small-star alternation
-    (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    SoCC'14) — same equi-join primitive, provably O(log^2 n) rounds
-    and per-round edge count never grows, the safe choice for
-    adversarial long-chain graphs (e.g. a 10^12-edge crawl graph with
-    transitively-chained near-dups). tests/test_dedup.py pins a
-    10^4-node path graph converging well inside the round budget.
-
-    Every round materializes via eager localCheckpoint: truncates the
-    iterative lineage (else the plan doubles per round) and gives the
-    convergence-check count and next round one shared execution.
-    Deterministic: min() over node ids, no sampling, no rng.
-
-    Raises RuntimeError if the round budget is exhausted before
-    convergence — partially-propagated labels are silent corruption
-    (wrong cluster ids downstream), so a loud stop is the only safe
-    behavior (ADVICE r03). ``stats`` (optional dict) receives
-    {"rounds": n} for scale diagnostics (SCALE.md appendix).
-    """
-    if algorithm == "star":
-        return _cc_star(pairs, max_iter, stats=stats)
-    edges = (pairs.select(F.col("id_a").alias("src"),
-                          F.col("id_b").alias("dst"))
-             .union(pairs.select(F.col("id_b").alias("src"),
-                                 F.col("id_a").alias("dst")))
-             .distinct()
-             .localCheckpoint(eager=True))
-    labels = (edges.select(F.col("src").alias("node")).distinct()
-              .withColumn("label", F.col("node"))
-              .localCheckpoint(eager=True))
-    changed = -1
-    rounds = 0
-    for _ in range(max_iter):
-        rounds += 1
-        nbr = (edges.join(labels.withColumnRenamed("node", "dst"), "dst")
-               .groupBy("src").agg(F.min("label").alias("nbr_label"))
-               .withColumnRenamed("src", "node"))
-        stepped = (labels.join(nbr, "node", "left")
-                   .select("node",
-                           F.least("label", F.coalesce("nbr_label",
-                                                       "label"))
-                           .alias("label"), F.col("label").alias("_old")))
-        # pointer jump: label <- label(label)
-        jump = (labels.select(F.col("node").alias("label"),
-                              F.col("label").alias("jmp_label")))
-        nxt = (stepped.join(jump, "label", "left")
-               .select("node",
-                       F.least("label", F.coalesce("jmp_label", "label"))
-                       .alias("label"), "_old")
-               .localCheckpoint(eager=True))
-        changed = nxt.where(F.col("label") != F.col("_old")).count()
-        labels = nxt.drop("_old")
-        if changed == 0:
-            break
-    if changed != 0:
-        raise RuntimeError(
-            f"connected_components: labels did not converge within "
-            f"{max_iter} rounds ({changed} still changing) — raise "
-            f"max_iter or use algorithm='star' for long-chain graphs")
-    if stats is not None:
-        stats["rounds"] = rounds
-    return labels.select("node", F.col("label").alias("cluster_id"))
-
-
-def _cc_star(pairs: DataFrame, max_iter: int = 25,
-             stats: dict | None = None) -> DataFrame:
-    """Large-star/small-star connected components (Kiveris et al.,
-    SoCC'14, Algorithm "Two-Phase"). Each round:
+    Large-star/small-star alternation (Kiveris et al., "Connected
+    Components in MapReduce and Beyond", SoCC'14). Each round, over
+    canonical edges (u, v) with u < v:
 
     * large-star — for every node u with (symmetrized) neighborhood
       N(u): connect every STRICTLY LARGER neighbor v > u to
@@ -979,40 +907,34 @@ def _cc_star(pairs: DataFrame, max_iter: int = 25,
       itself to m = min(N(u) ∪ {u}).
 
     Both steps preserve connectivity and never increase the edge
-    count; at the fixed point every component is a star centered on
-    its minimum node, so the final (v, m) edges ARE the labels.
-    Convergence is screened with an order-insensitive edge-set
-    checksum (count + bit_xor of xxhash64 — XOR can't overflow under
-    ANSI mode and edges are distinct, so it's a set checksum); a
-    checksum match then triggers ONE exact set-equality check
-    (equal counts + one-sided exceptAll empty) before the loop
-    accepts the fixed point, so a ~2^-64 checksum collision costs an
-    extra round instead of silently wrong labels.
+    count; rounds are O(log^2 n) on any graph, so a long chain of
+    transitively-chained near-dups cannot stall it
+    (tests/test_dedup.py pins a 10^4-node path, sorted and shuffled).
 
-    Raises RuntimeError when the round budget is exhausted (same
-    loud-stop contract as the propagate loop).
+    Exit: after each round, stop once the edge set is a star forest —
+    no node that appears as a ``v`` appears in any other edge. Then
+    every ``u`` is its component's minimum, so the (u, v) edges ARE
+    the labels and no fixed-point confirmation round is needed. The
+    test is one aggregate over (u, leaf=0) ∪ (v, leaf=1) grouped by
+    node. Every round materializes via eager localCheckpoint
+    (truncates the iterative lineage, and the exit test and next round
+    share one execution). Deterministic: min() over node ids, no rng.
+
+    Raises RuntimeError if the round budget runs out first —
+    partially-merged labels are silent corruption (wrong cluster ids
+    downstream), so a loud stop is the only safe behavior.
+    ``stats`` (optional dict) receives {"rounds": n}.
     """
-    # canonical undirected, dedup'd, self-loop-free pair list
-    edges = (pairs.select(
+    # canonical undirected, dedup'd pair list; self-pairs stay in the
+    # checkpoint so the labels below never read ``pairs`` (and its
+    # whole lineage) a second time
+    canon = (pairs.select(
         F.least("id_a", "id_b").alias("u"),
         F.greatest("id_a", "id_b").alias("v"))
-        .where(F.col("u") != F.col("v"))
         .distinct()
         .localCheckpoint(eager=True))
-
-    def checksum(e: DataFrame) -> tuple[int, int]:
-        row = e.agg(
-            F.count("*").alias("n"),
-            F.coalesce(F.bit_xor(F.xxhash64("u", "v")), F.lit(0)).alias("h")
-        ).collect()[0]
-        return int(row["n"]), int(row["h"])
-
-    prev = checksum(edges)
-    prev_edges = edges
-    converged = False
-    rounds = 0
-    for _ in range(max_iter):
-        rounds += 1
+    edges = canon.where(F.col("u") != F.col("v"))
+    for rounds in range(1, max_iter + 1):
         # large-star over symmetrized adjacency
         sym = edges.union(edges.select(F.col("v").alias("u"),
                                        F.col("u").alias("v")))
@@ -1029,53 +951,44 @@ def _cc_star(pairs: DataFrame, max_iter: int = 25,
         oriented = large.select(F.col("v").alias("u"), F.col("u").alias("v"))
         smins = (oriented.groupBy("u")
                  .agg(F.least(F.min("v"), F.first("u")).alias("m")))
-        small = (oriented.join(smins, "u")
+        edges = (oriented.join(smins, "u")
                  .select(F.explode(F.array("u", "v")).alias("n"), "m")
                  .select(F.least("n", "m").alias("u"),
                          F.greatest("n", "m").alias("v"))
                  .where(F.col("u") != F.col("v"))
                  .distinct()
                  .localCheckpoint(eager=True))
-        edges = small
-        cur = checksum(edges)
-        if cur == prev:
-            # exact verification of the screened fixed point: counts
-            # already match, so one-sided exceptAll-empty proves set
-            # equality (both frames are distinct'd)
-            if prev_edges.exceptAll(edges).limit(1).count() == 0:
-                converged = True
-                break
-        prev = cur
-        prev_edges = edges
-    if not converged:
+        # star forest <=> no leaf (a node seen as v) is in >1 edge
+        bad = (edges.select(F.col("u").alias("n"), F.lit(0).alias("leaf"))
+               .union(edges.select(F.col("v").alias("n"),
+                                   F.lit(1).alias("leaf")))
+               .groupBy("n")
+               .agg(F.sum("leaf").alias("leaf"), F.count("*").alias("deg"))
+               .where((F.col("leaf") > 0) & (F.col("deg") > 1)))
+        if bad.limit(1).count() == 0:
+            break
+    else:
         raise RuntimeError(
-            f"connected_components(star): edge set did not reach a "
-            f"fixed point within {max_iter} rounds")
+            f"connected_components: edge set did not converge to a "
+            f"star forest within {max_iter} rounds")
     if stats is not None:
         stats["rounds"] = rounds
-    # fixed point = stars around component minima: (u=min, v=member)
-    members = edges.select(F.col("v").alias("node"),
-                           F.col("u").alias("cluster_id"))
-    roots = (edges.select(F.col("u").alias("node")).distinct()
-             .withColumn("cluster_id", F.col("node")))
-    # nodes seen ONLY in self-pairs were dropped by the u != v
-    # canonicalization; return them as singletons so both algorithms
-    # honor the same "every node that appears in a pair" contract
-    touched = edges.select("u").union(edges.select(F.col("v").alias("u")))
-    selfonly = (pairs.where(F.col("id_a") == F.col("id_b"))
-                .select(F.col("id_a").alias("node")).distinct()
-                .join(touched.distinct()
-                      .withColumnRenamed("u", "node"), "node",
-                      "left_anti")
-                .withColumn("cluster_id", F.col("node")))
-    return members.union(roots).union(selfonly)
+    # label = min(own id, star center): a leaf v takes its center u,
+    # the component minimum; a center or a self-pair-only node keeps
+    # its own id. Every node of a pair is a canonical u (a center is
+    # its component's minimum, so it is the u of all its pairs) or a
+    # final leaf v, so one aggregate labels them all.
+    return (edges.select(F.col("v").alias("node"),
+                         F.col("u").alias("cluster_id"))
+            .union(canon.select(F.col("u").alias("node"),
+                                F.col("u").alias("cluster_id")))
+            .groupBy("node").agg(F.min("cluster_id").alias("cluster_id")))
 
 
 def resolve_dup_clusters(docs: DataFrame, pairs: DataFrame,
                          id_col: str = "doc_id",
                          size_col: str = "n_tok",
-                         max_iter: int = 25,
-                         algorithm: str = "propagate") -> DataFrame:
+                         max_iter: int = 25) -> DataFrame:
     """Full dedup verdict per doc: group near-dup ``pairs`` into
     clusters (connected components) and pick one canonical doc per
     cluster — the standard resolution step after any pair miner
@@ -1103,7 +1016,7 @@ def resolve_dup_clusters(docs: DataFrame, pairs: DataFrame,
     comp = connected_components(
         pairs.select(F.col("id_a").cast("string").alias("id_a"),
                      F.col("id_b").cast("string").alias("id_b")),
-        max_iter=max_iter, algorithm=algorithm)
+        max_iter=max_iter)
     base = (docs.select(F.col(id_col), F.col(size_col))
             .join(comp.withColumnRenamed("node", id_col), id_col, "left")
             .select(id_col, size_col,

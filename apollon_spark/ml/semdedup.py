@@ -244,13 +244,14 @@ def semantic_dedup(vectors: DataFrame, threshold: float,
                    id_col: str = "vec_id",
                    vec_col: str = "embedding",
                    max_iter: int = 25,
-                   cc_algorithm: str = "propagate",
                    pair_method: str = "join") -> DataFrame:
     """Full SemDeDup verdict per vector: (id, cluster, centroid_sim,
     group_id, keep). Duplicate groups are connected components of the
-    within-cluster pair graph; each group keeps exactly the member
-    with the LOWEST centroid similarity (paper §3 keep policy; ties ->
-    lowest id). Vectors in no pair are singleton groups with keep=1.
+    within-cluster pair graph (``connected_components``: large-star/
+    small-star rounds until the edge set is an exact star forest); each
+    group keeps exactly the member with the LOWEST centroid similarity
+    (paper §3 keep policy; ties -> lowest id). Vectors in no pair are
+    singleton groups with keep=1.
 
     Components run at pair scale; the verdict is one window over
     groups (singletons hit tiny partitions) and one id-shuffle join
@@ -274,7 +275,7 @@ def semantic_dedup(vectors: DataFrame, threshold: float,
     pairs = pair_fn(vectors, threshold, centroids=centroids,
                     id_col=id_col, vec_col=vec_col, assign=assign)
     comp = connected_components(pairs.select("id_a", "id_b"),
-                                max_iter=max_iter, algorithm=cc_algorithm)
+                                max_iter=max_iter)
     base = (assign
             .join(comp.withColumnRenamed("node", "id"), "id", "left")
             .select("id", "cluster", "centroid_sim",

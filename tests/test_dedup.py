@@ -281,9 +281,8 @@ def test_simhash_near_dups_recall_is_exact(spark, sf_dir):
 
 
 def test_connected_components_exact(spark):
-    """Min-label propagation == exact components on a graph with a
-    chain (forces >1 propagation round), a triangle, an isolated
-    pair, and a star."""
+    """Exact components on a graph with a chain (forces >1 round), a
+    triangle, an isolated pair, and a star."""
     from apollon_spark.ml.dedup import connected_components
     pairs = [
         # chain a-b-c-d-e (diameter 4)
@@ -306,37 +305,79 @@ def test_connected_components_exact(spark):
     assert got == want
 
 
-def test_connected_components_star_matches_propagate(spark):
-    """large-star/small-star (Kiveris SoCC'14) returns the identical
-    (node -> min-reachable-id) labeling as min-label propagation on a
-    mixed graph (chain, triangle, pair, star)."""
-    from apollon_spark.ml.dedup import connected_components
+def _uf_oracle(pairs):
+    """Union-find components: node -> smallest id in its component,
+    for every node that appears in a pair (self-pairs included)."""
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    # relabel every node to its component min
+    comp = {}
+    for n in parent:
+        comp.setdefault(find(n), []).append(n)
+    return {n: min(members)
+            for members in comp.values() for n in members}
+
+
+def _cc_labels(spark, pairs, **kw):
+    df = spark.createDataFrame(pairs, "id_a string, id_b string")
+    return {r["node"]: r["cluster_id"]
+            for r in dedup.connected_components(df, **kw).collect()}
+
+
+def test_connected_components_mixed_graph_matches_oracle(spark):
+    """(node -> min-reachable-id) labeling equals the union-find oracle
+    on a mixed graph (chain, triangle, pair, star), with every pair
+    also listed reversed."""
     pairs = [
         ("a", "b"), ("b", "c"), ("c", "d"), ("d", "e"),
         ("p", "q"), ("q", "r"), ("p", "r"),
         ("x", "y"),
         ("m", "n1"), ("m", "n2"), ("m", "n3"),
     ]
-    df = spark.createDataFrame(pairs, "id_a string, id_b string")
-    star = {r["node"]: r["cluster_id"]
-            for r in connected_components(df, algorithm="star").collect()}
-    prop = {r["node"]: r["cluster_id"]
-            for r in connected_components(df).collect()}
-    assert star == prop and len(star) == 14
+    pairs += [(b, a) for a, b in pairs]
+    got = _cc_labels(spark, pairs)
+    assert got == _uf_oracle(pairs) and len(got) == 14
+
+
+def test_connected_components_star_forest_exit_after_one_round(spark):
+    """The loop stops on the exact star-forest test, with no
+    fixed-point confirmation round: disjoint triangles plus one leaf
+    shared by two centers ((a, c), (b, c)) form a star forest after a
+    single large-star/small-star round."""
+    pairs = [("p", "q"), ("q", "r"), ("p", "r"),
+             ("s", "t"), ("t", "w"), ("s", "w"),
+             ("a", "c"), ("b", "c")]
+    stats = {}
+    assert _cc_labels(spark, pairs, stats=stats) == _uf_oracle(pairs)
+    assert stats["rounds"] == 1
 
 
 def test_connected_components_star_long_chain(spark):
     """Adversarial long-chain property (VERDICT r03 #5): a 10^4-node
-    path graph — diameter 10^4, the worst case for plain propagation —
-    converges to ONE component under the star algorithm within the
-    default O(log^2 n) round budget (25 ≫ ~2·log2(10^4))."""
-    from apollon_spark.ml.dedup import connected_components
+    path graph — diameter 10^4 — converges to ONE component within
+    the default O(log^2 n) round budget (25 ≫ ~2·log2(10^4)), both
+    with ids in path order and with ids shuffled along the path."""
     n = 10_000
-    path = [(f"n{i:05d}", f"n{i + 1:05d}") for i in range(n - 1)]
-    df = spark.createDataFrame(path, "id_a string, id_b string")
-    lab = connected_components(df, max_iter=25, algorithm="star").collect()
-    assert len(lab) == n
-    assert all(r["cluster_id"] == "n00000" for r in lab)
+    ids = [f"n{i:05d}" for i in range(n)]
+    shuffled = list(ids)
+    np.random.RandomState(7).shuffle(shuffled)
+    for order in (ids, shuffled):
+        path = list(zip(order[:-1], order[1:]))
+        df = spark.createDataFrame(path, "id_a string, id_b string")
+        lab = dedup.connected_components(df, max_iter=25).collect()
+        assert len(lab) == n
+        assert all(r["cluster_id"] == "n00000" for r in lab)
 
 
 def test_connected_components_nonconvergence_raises(spark):
@@ -419,32 +460,8 @@ def test_duplicate_passages_exact(spark):
 
 
 def test_connected_components_star_random_graphs(spark):
-    """Randomized equivalence: on seeded Erdos-Renyi-ish graphs the
-    star and propagate algorithms return identical labelings (and both
-    match a python union-find oracle)."""
-    from apollon_spark.ml.dedup import connected_components
-
-    def uf_oracle(pairs):
-        parent = {}
-
-        def find(x):
-            parent.setdefault(x, x)
-            while parent[x] != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
-
-        for a, b in pairs:
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                parent[max(ra, rb)] = min(ra, rb)
-        # relabel every node to its component min
-        comp = {}
-        for n in parent:
-            comp.setdefault(find(n), []).append(n)
-        return {n: min(members)
-                for members in comp.values() for n in members}
-
+    """On seeded Erdos-Renyi-ish graphs the labeling equals the
+    union-find oracle."""
     rng = np.random.RandomState(23)
     for trial in range(4):
         n = int(rng.randint(20, 120))
@@ -456,15 +473,26 @@ def test_connected_components_star_random_graphs(spark):
                 pairs.append((f"n{min(a,b):04d}", f"n{max(a,b):04d}"))
         if not pairs:
             continue
-        df = spark.createDataFrame(pairs, "id_a string, id_b string")
-        prop = {r["node"]: r["cluster_id"]
-                for r in connected_components(df).collect()}
-        star = {r["node"]: r["cluster_id"]
-                for r in connected_components(df, algorithm="star")
-                .collect()}
-        want = uf_oracle(pairs)
-        assert prop == want, f"trial {trial} propagate"
-        assert star == want, f"trial {trial} star"
+        assert _cc_labels(spark, pairs) == _uf_oracle(pairs), \
+            f"trial {trial}"
+
+
+def test_connected_components_property(spark):
+    """Property: any pair list over up to 40 nodes — self-pairs,
+    duplicate pairs and reversed pairs included — labels exactly as
+    the union-find oracle."""
+    from hypothesis import HealthCheck, given, settings
+    from hypothesis import strategies as st
+
+    node = st.integers(min_value=0, max_value=39).map(lambda i: f"n{i:02d}")
+
+    @settings(max_examples=10, deadline=None,
+              suppress_health_check=list(HealthCheck))
+    @given(pairs=st.lists(st.tuples(node, node), min_size=1, max_size=80))
+    def prop(pairs):
+        assert _cc_labels(spark, pairs) == _uf_oracle(pairs)
+
+    prop()
 
 
 def test_merge_passage_spans_and_dup_stats(spark):
@@ -511,16 +539,12 @@ def test_merge_passage_spans_and_dup_stats(spark):
     assert stats["z"]["n_dup_tokens"] == 0 and stats["z"]["dup_frac"] == 0.0
 
 
-def test_cc_self_pair_only_nodes_both_algorithms(spark):
-    """A node appearing ONLY in a self-pair must come back as its own
-    singleton from BOTH algorithms (the star canonicalization drops
-    self-loops internally; the contract must not differ by algorithm)."""
-    pairs = spark.createDataFrame(
-        [("a", "a"), ("b", "c")], "id_a string, id_b string")
-    for algo in ("propagate", "star"):
-        got = {r["node"]: r["cluster_id"] for r in
-               dedup.connected_components(pairs, algorithm=algo).collect()}
-        assert got == {"a": "a", "b": "b", "c": "b"}, (algo, got)
+def test_cc_self_pair_only_nodes_are_singletons(spark):
+    """A node appearing ONLY in a self-pair comes back as its own
+    singleton (the canonicalization drops self-loops internally)."""
+    pairs = [("a", "a"), ("b", "c")]
+    got = _cc_labels(spark, pairs)
+    assert got == _uf_oracle(pairs) == {"a": "a", "b": "b", "c": "b"}
 
 
 def test_passage_excision(spark):

@@ -132,11 +132,10 @@ def test_dup_clusters_empty_pairs(spark, empty_docs):
 
 def test_r04_ops_empty(spark, empty_docs):
     """Empty-input sweep for the r04 additions: flag-level peak scan,
-    fixed-parameter E-step, star connected components, hash-packed
-    contamination."""
+    fixed-parameter E-step, hash-packed contamination (empty pairs
+    through connected components: test_dup_clusters_empty_pairs)."""
     from apollon_spark.hmm import estep_docs
     from apollon_spark.ml.curation import contamination_check
-    from apollon_spark.ml.dedup import connected_components
     from apollon_spark.onsets import peak_flags
 
     empty_odf = spark.createDataFrame(
@@ -146,10 +145,6 @@ def test_r04_ops_empty(spark, empty_docs):
     assert estep_docs(empty_docs, (16.0, 128.0),
                       ((0.75, 0.25), (0.375, 0.625)), (0.5, 0.5)) \
         .count() == 0
-
-    empty_pairs = spark.createDataFrame([], "id_a string, id_b string")
-    assert connected_components(empty_pairs, algorithm="star").count() == 0
-    assert connected_components(empty_pairs).count() == 0
 
     assert contamination_check(empty_docs, empty_docs, k=5,
                                packing="hash").count() == 0
@@ -180,3 +175,39 @@ def test_late_r04_ops_empty(spark, empty_docs):
 
     with _pytest.raises(ValueError, match="no ratio mass"):
         budget_mixture_weights(empty_docs, {"web": 1.0}, 1000)
+
+
+def test_cluster_stage_degenerate_corpora(spark, tmp_path, capsys):
+    """`--stage cluster` end to end on degenerate docs tables: empty
+    (0 verdict rows), one doc (kept), and five docs with identical
+    tokens (one cluster of size 5 with exactly one keeper)."""
+    import json
+
+    from apollon_spark import cli, storage
+    toks = [3, 1, 4, 1, 5, 9, 2, 6]
+    cases = {
+        "empty": [],
+        "one": [("d0", toks, len(toks), "s")],
+        "same5": [(f"d{i}", toks, len(toks), "s") for i in range(5)],
+    }
+    got = {}
+    for name, rows in cases.items():
+        src, out = str(tmp_path / f"{name}_in"), str(tmp_path / f"{name}_out")
+        storage.write_table(spark.createDataFrame(
+            rows, "doc_id string, tokens array<int>, n_tok int, "
+                  "source string"), src)
+        assert cli.main(["--stage", "cluster", "--input", src,
+                         "--output", out]) == 0
+        printed = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+        got[name] = (printed, [r.asDict() for r in
+                               storage.read_table(spark, out).collect()])
+
+    assert got["empty"] == ({"docs": 0, "kept": 0}, [])
+    assert got["one"] == ({"docs": 1, "kept": 1},
+                          [{"doc_id": "d0", "cluster_id": "d0",
+                            "cluster_size": 1, "keep": 1}])
+    printed, rows = got["same5"]
+    assert printed == {"docs": 5, "kept": 1}
+    assert len(rows) == 5 and sum(r["keep"] for r in rows) == 1
+    assert {(r["cluster_id"], r["cluster_size"]) for r in rows} \
+        == {("d0", 5)}
