@@ -132,12 +132,6 @@ def main(argv: list[str] | None = None) -> int:
                          "remain, reported as residual_span_starts); "
                          ">1 = iterate excise_to_fixpoint to "
                          "convergence, raising if still not converged")
-    ap.add_argument("--pair-method", choices=["join", "grouped"],
-                    default="join",
-                    help="semdedup: within-cluster scoring. 'grouped' "
-                         "= one BLAS pass per cluster (tight-cluster "
-                         "fast path); 'join' = pair-materializing "
-                         "equi-join (oversized-cluster fallback)")
     ap.add_argument("--emit", choices=["spans", "stats", "cut"],
                     default="spans",
                     help="passages: 'spans' = duplicated window starts "
@@ -346,8 +340,7 @@ def main(argv: list[str] | None = None) -> int:
         from .ml.semdedup import semantic_dedup
         out = semantic_dedup(docs, args.threshold,
                              n_clusters=args.n_clusters,
-                             id_col=id_col, vec_col=args.vec_col,
-                             pair_method=args.pair_method)
+                             id_col=id_col, vec_col=args.vec_col)
         storage.write_table(out, args.output)
         written = storage.read_table(spark, args.output)
         n, kept = written.select(F.count("*"), F.sum("keep")).first()

@@ -20,10 +20,10 @@ Scale design (the whole point of the clustering step):
   miners in ``dedup.py``.
 - Centroids are tiny (k × dim) and broadcast; routing is ONE Arrow
   pass over the corpus (no shuffle).
-- The within-cluster self-join runs on (id, cluster) KEYS ONLY;
-  embedding payloads are joined back once per surviving candidate
-  pair, never carried through the candidate shuffle — same discipline
-  as ``cosine_near_dups_lsh``.
+- Pairs are mined by ONE per-cluster ``applyInPandas`` BLAS scorer
+  (no candidate id-pair shuffle, no per-pair payload join): each
+  cluster is scored in fixed row tiles, so a task holds |c|×dim plus
+  one tile×|c| block, never the |c|² matrix.
 - Group resolution reuses ``connected_components`` at PAIR scale
   (candidate-scale, not corpus-scale) and the verdict join back is
   one id shuffle.
@@ -38,11 +38,14 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .dedup import connected_components
-from .simsearch import _cos_sim_udf, kmeans_centroids
+from .simsearch import kmeans_centroids
 
 PAIR_SCHEMA = "cluster int, id_a long, id_b long, cos_sim double"
 VERDICT_SCHEMA = ("id long, cluster int, centroid_sim double, "
                   "group_id long, keep int")
+# rows per scoring tile in ``_cluster_pairs``: one tile is a
+# _TILE × |cluster| float64 block (2 MB per 1k members)
+_TILE = 256
 
 
 def _default_centroids(vectors: DataFrame, id_col: str, vec_col: str,
@@ -101,22 +104,44 @@ def semantic_assign(vectors: DataFrame, centroids: np.ndarray,
         assign, "id long, cluster int, centroid_sim double")
 
 
-def _ensure_assign(vectors: DataFrame, n_clusters: int,
-                   centroids: np.ndarray | None, sample_size: int,
-                   seed: int, id_col: str, vec_col: str,
-                   assign: DataFrame | None) -> DataFrame | None:
-    """Shared bootstrap for the two pair miners: pass through a
-    caller-provided routing table, else train/accept centroids and
-    route. None signals an empty corpus (callers return an empty
-    PAIR_SCHEMA frame)."""
-    if assign is not None:
-        return assign
-    if centroids is None:
-        centroids = _default_centroids(vectors, id_col, vec_col,
-                                       n_clusters, sample_size, seed)
-        if centroids is None:        # empty corpus
-            return None
-    return semantic_assign(vectors, centroids, id_col, vec_col)
+def _cluster_pairs(ids: np.ndarray, x: np.ndarray,
+                   threshold: float) -> tuple[np.ndarray, np.ndarray,
+                                              np.ndarray]:
+    """Every pair of one cluster with cosine >= ``threshold``:
+    (id_a, id_b, cos_sim) arrays, id_a < id_b, cos_sim rounded HALF-UP
+    to 6 decimals, a zero-norm row scoring 0 against everything.
+
+    Rows are sorted by id and scored in row tiles of ``_TILE``: tile
+    ``[i, i+T)`` multiplies against rows ``[i, n)`` only and keeps the
+    strict upper triangle, so peak memory is O(|c|·dim + T·|c|) instead
+    of the O(|c|²) of one full similarity matrix — a degenerate
+    catch-all cluster costs time, not one worker's heap."""
+    order = np.argsort(ids)
+    ids = ids[order]
+    x = x[order]
+    xn = x / np.maximum(np.linalg.norm(x, axis=1, keepdims=True), 1e-300)
+    out_a, out_b, out_s = [], [], []
+    for i in range(0, len(ids), _TILE):
+        s = xn[i:i + _TILE] @ xn[i:].T
+        # HALF-UP rounding (floor(x*1e6 + 0.5)), in place, to match
+        # Spark's F.round / DuckDB round() tie direction — np.round is
+        # half-to-EVEN and would flip a pair sitting exactly on a
+        # .5e-6 tie at the threshold. Residual divergence class: values
+        # within ~1 ulp of a tie (the scaled multiply is float, the SQL
+        # engines round decimal-exact) — measure-zero for real data.
+        s *= 1e6
+        s += 0.5
+        np.floor(s, out=s)
+        s /= 1e6
+        r, c = np.nonzero(s >= threshold)
+        up = c > r                   # tile row r is global row i + r
+        r, c = r[up], c[up]
+        out_a.append(ids[i + r])
+        out_b.append(ids[i + c])
+        out_s.append(s[r, c])
+        del s                        # free before the next tile lands
+    return (np.concatenate(out_a), np.concatenate(out_b),
+            np.concatenate(out_s))
 
 
 def semantic_dup_pairs(vectors: DataFrame, threshold: float,
@@ -127,112 +152,45 @@ def semantic_dup_pairs(vectors: DataFrame, threshold: float,
                        vec_col: str = "embedding",
                        assign: DataFrame | None = None) -> DataFrame:
     """Within-cluster near-duplicate pairs: (cluster, id_a, id_b,
-    cos_sim) for every same-cluster pair with cosine >= ``threshold``.
+    cos_sim) for every same-cluster pair with cosine >= ``threshold``,
+    id_a < id_b, cos_sim rounded half-up to 6 decimals.
 
     ``centroids`` overrides the kmeans++ training with explicit
     vectors, making the stage a deterministic function of its inputs —
     the contract gate passes the first rows of the corpus so the SQL
     oracle can re-derive routing and scoring exactly (same device as
-    ``ivf_candidates``/``som_train``).
+    ``ivf_candidates``/``som_train``). ``assign`` lets a caller that
+    already routed the corpus (``semantic_dedup``) pass its (id,
+    cluster, ...) table in, so the routing scan runs once.
 
-    Keys-only candidate mining: the (id, cluster) table is lazily
-    checkpointed before its self-join (else both join sides recompute
-    the routing scan), payloads join back once per pair.
-    ``assign`` lets a caller that already routed the corpus
-    (``semantic_dedup``) pass its (id, cluster, ...) table in, so the
-    routing scan runs once — and is checkpointed once, not re-pinned
-    here on top of the caller's checkpoint."""
-    keys_checkpointed = assign is not None
-    assign = _ensure_assign(vectors, n_clusters, centroids, sample_size,
-                            seed, id_col, vec_col, assign)
+    One ``applyInPandas`` per cluster scores the cluster in BLAS row
+    tiles (``_cluster_pairs``): no same-cluster id-pair
+    materialization and no per-pair payload join before the threshold
+    cut, and a task holds one cluster's |c|×dim block plus one
+    ``_TILE``×|c| tile. A pair-materializing self-join was measured
+    ~12× slower on exactly the oversized clusters it was meant to
+    serve (SCALE.md §6i), so this is the only miner."""
     if assign is None:
-        return vectors.sparkSession.createDataFrame([], PAIR_SCHEMA)
-
-    v = vectors.select(F.col(id_col).cast("long").alias("id"),
-                       F.col(vec_col).cast("array<double>").alias("v"))
-    keys = assign.select("id", "cluster")
-    if not keys_checkpointed:
-        keys = keys.localCheckpoint(eager=False)
-    a, b = keys.alias("a"), keys.alias("b")
-    pairs = (a.join(b, (F.col("a.cluster") == F.col("b.cluster"))
-                    & (F.col("a.id") < F.col("b.id")))
-             .select(F.col("a.cluster").alias("cluster"),
-                     F.col("a.id").alias("id_a"),
-                     F.col("b.id").alias("id_b")))
-    cand = (pairs
-            .join(v.select(F.col("id").alias("id_a"),
-                           F.col("v").alias("va")), "id_a")
-            .join(v.select(F.col("id").alias("id_b"),
-                           F.col("v").alias("vb")), "id_b"))
-    cos_sim = _cos_sim_udf()
-    return (cand.select("cluster", "id_a", "id_b",
-                        F.round(cos_sim("va", "vb"), 6).alias("cos_sim"))
-            .where(F.col("cos_sim") >= threshold))
-
-
-def semantic_dup_pairs_grouped(vectors: DataFrame, threshold: float,
-                               n_clusters: int = 8,
-                               centroids: np.ndarray | None = None,
-                               sample_size: int = 2048, seed: int = 13,
-                               id_col: str = "vec_id",
-                               vec_col: str = "embedding",
-                               assign: DataFrame | None = None
-                               ) -> DataFrame:
-    """Per-cluster GROUPED scoring variant of ``semantic_dup_pairs``
-    (VERDICT r04 #6): one ``applyInPandas`` per cluster scores the
-    whole within-cluster similarity matrix in a single BLAS pass —
-    no same-cluster id-pair materialization and no per-pair payload
-    join, which the join form pays BEFORE the threshold cut (its
-    candidate set is quadratic in cluster size even when almost
-    nothing survives). This is the right shape for the tight-cluster
-    regime SemDeDup targets (the paper's ~100k clusters over
-    billions of rows keep |cluster| small); each task holds one
-    cluster's |c|×dim block plus its |c|² similarity matrix, so for
-    DEGENERATE clustering (a catch-all cluster with millions of
-    members) keep the join form, whose pairs spill to the shuffle
-    instead of one task's heap — same pairing as ivf vs brute in
-    simsearch. Emits the same (cluster, id_a, id_b, cos_sim) rows,
-    id_a < id_b, rounded to 6 decimals."""
-    assign = _ensure_assign(vectors, n_clusters, centroids, sample_size,
-                            seed, id_col, vec_col, assign)
-    if assign is None:
-        return vectors.sparkSession.createDataFrame([], PAIR_SCHEMA)
+        if centroids is None:
+            centroids = _default_centroids(vectors, id_col, vec_col,
+                                           n_clusters, sample_size, seed)
+            if centroids is None:    # empty corpus
+                return vectors.sparkSession.createDataFrame(
+                    [], PAIR_SCHEMA)
+        assign = semantic_assign(vectors, centroids, id_col, vec_col)
 
     v = vectors.select(F.col(id_col).cast("long").alias("id"),
                        F.col(vec_col).cast("array<double>").alias("v"))
     data = v.join(assign.select("id", "cluster"), "id")
 
-    def score(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        n = len(pdf)
-        if n < 2:
-            return pd.DataFrame(
-                {"cluster": pd.Series([], dtype="int32"),
-                 "id_a": pd.Series([], dtype="int64"),
-                 "id_b": pd.Series([], dtype="int64"),
-                 "cos_sim": pd.Series([], dtype="float64")})
-        ids = pdf["id"].to_numpy()
-        order = np.argsort(ids)
-        ids = ids[order]
-        x = np.stack([np.asarray(r, "float64")
-                      for r in pdf["v"].to_numpy()])[order]
-        xn = x / np.maximum(np.linalg.norm(x, axis=1, keepdims=True),
-                            1e-300)
-        sims = xn @ xn.T
-        iu, ju = np.triu_indices(n, k=1)
-        # HALF-UP rounding (floor(x*1e6 + 0.5)) to match the join
-        # form's F.round tie direction — np.round is half-to-EVEN, so
-        # a similarity landing exactly on a .5e-6 tie would round
-        # differently between pair_method settings and flip a pair at
-        # the threshold boundary. Residual divergence class: values
-        # whose decimal expansion sits within ~1 ulp of the tie (the
-        # scaled multiply is float, Spark's BigDecimal path is
-        # decimal-exact) — measure-zero for real cosine data, noted
-        # in test_grouped_pairs_equal_join_pairs.
-        s = np.floor(sims[iu, ju] * 1e6 + 0.5) / 1e6
-        m = s >= threshold
+    # unannotated on purpose: a partial annotation makes applyInPandas
+    # warn that it cannot infer the eval type from the hints
+    def score(key, pdf):
+        x = np.stack([np.asarray(r, "float64") for r in pdf["v"].to_numpy()])
+        a, b, s = _cluster_pairs(pdf["id"].to_numpy(), x, threshold)
         return pd.DataFrame({
-            "cluster": np.full(int(m.sum()), key[0], dtype="int32"),
-            "id_a": ids[iu[m]], "id_b": ids[ju[m]], "cos_sim": s[m]})
+            "cluster": np.full(len(a), key[0], dtype="int32"),
+            "id_a": a, "id_b": b, "cos_sim": s})
 
     return data.groupBy("cluster").applyInPandas(score, PAIR_SCHEMA)
 
@@ -243,8 +201,7 @@ def semantic_dedup(vectors: DataFrame, threshold: float,
                    sample_size: int = 2048, seed: int = 13,
                    id_col: str = "vec_id",
                    vec_col: str = "embedding",
-                   max_iter: int = 25,
-                   pair_method: str = "join") -> DataFrame:
+                   max_iter: int = 25) -> DataFrame:
     """Full SemDeDup verdict per vector: (id, cluster, centroid_sim,
     group_id, keep). Duplicate groups are connected components of the
     within-cluster pair graph (``connected_components``: large-star/
@@ -253,14 +210,11 @@ def semantic_dedup(vectors: DataFrame, threshold: float,
     (paper §3 keep policy; ties -> lowest id). Vectors in no pair are
     singleton groups with keep=1.
 
-    Components run at pair scale; the verdict is one window over
-    groups (singletons hit tiny partitions) and one id-shuffle join
-    back to the corpus. ``pair_method``: "join" (pair-materializing
-    equi-join — the oversized-cluster fallback) or "grouped"
-    (per-cluster applyInPandas BLAS pass — the tight-cluster fast
-    path; see ``semantic_dup_pairs_grouped``)."""
-    if pair_method not in ("join", "grouped"):
-        raise ValueError(f"unknown pair_method {pair_method!r}")
+    The corpus is routed once (checkpointed) and handed to
+    ``semantic_dup_pairs``, whose per-cluster tiled BLAS scorer is the
+    one pair miner. Components run at pair scale; the keep pick is one
+    min-by-struct aggregate over groups and one join back on the group
+    key."""
     if centroids is None:
         centroids = _default_centroids(vectors, id_col, vec_col,
                                        n_clusters, sample_size, seed)
@@ -270,10 +224,8 @@ def semantic_dedup(vectors: DataFrame, threshold: float,
 
     assign = semantic_assign(vectors, centroids, id_col, vec_col) \
         .localCheckpoint(eager=False)
-    pair_fn = (semantic_dup_pairs if pair_method == "join"
-               else semantic_dup_pairs_grouped)
-    pairs = pair_fn(vectors, threshold, centroids=centroids,
-                    id_col=id_col, vec_col=vec_col, assign=assign)
+    pairs = semantic_dup_pairs(vectors, threshold, id_col=id_col,
+                               vec_col=vec_col, assign=assign)
     comp = connected_components(pairs.select("id_a", "id_b"),
                                 max_iter=max_iter)
     base = (assign

@@ -194,22 +194,6 @@ def main() -> None:
         "n_clusters": 128,
         "vectors_per_sec": round(n_vec_out / t_sem, 1),
     }
-    # grouped per-cluster scoring variant (VERDICT r04 #6): same
-    # verdict, one BLAS pass per cluster instead of pair-materializing
-    # joins — the tight-cluster fast path
-    t0 = time.time()
-    verdict_g = semantic_dedup(emb, threshold=0.97, n_clusters=128,
-                               pair_method="grouped")
-    n_vec_g, n_kept_g = verdict_g.agg(F.count("*"), F.sum("keep")).first()
-    t_semg = time.time() - t0
-    assert int(n_kept_g) == int(n_vec_kept), (n_kept_g, n_vec_kept)
-    out["semantic_dedup_grouped"] = {
-        "sec": round(t_semg, 2),
-        "n_vectors": n_vec_g,
-        "n_kept": int(n_kept_g),
-        "n_clusters": 128,
-        "vectors_per_sec": round(n_vec_g / t_semg, 1),
-    }
     emb.unpersist()
 
     docs.unpersist()

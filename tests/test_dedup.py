@@ -385,7 +385,8 @@ def test_connected_components_nonconvergence_raises(spark):
     RuntimeError, not silently-wrong cluster ids (ADVICE r03)."""
     import pytest
     from apollon_spark.ml.dedup import connected_components
-    # a diameter-8 chain cannot converge in one propagation round
+    # a diameter-8 chain is not yet a star forest after one
+    # large-star/small-star round
     chain = [(chr(97 + i), chr(98 + i)) for i in range(8)]
     df = spark.createDataFrame(chain, "id_a string, id_b string")
     with pytest.raises(RuntimeError, match="did not converge"):

@@ -211,3 +211,40 @@ def test_cluster_stage_degenerate_corpora(spark, tmp_path, capsys):
     assert len(rows) == 5 and sum(r["keep"] for r in rows) == 1
     assert {(r["cluster_id"], r["cluster_size"]) for r in rows} \
         == {("d0", 5)}
+
+
+def test_semdedup_stage_degenerate_corpora(spark, tmp_path, capsys):
+    """`--stage semdedup --n-clusters 8` end to end on degenerate vector
+    tables: one vector (kept), five identical vectors (one duplicate
+    group, one keeper), three zero vectors (cosine 0, never NaN: all
+    kept) and three random vectors, fewer than the cluster count (all
+    kept at threshold 0.9)."""
+    import json
+
+    from apollon_spark import cli, storage
+    rng = np.random.default_rng(4)
+    v = [0.5, -1.0, 2.0, 0.25]
+    cases = {
+        "one": [v],
+        "same5": [v] * 5,
+        "zero3": [[0.0] * 4] * 3,
+        "rand3": rng.standard_normal((3, 4)).tolist(),
+    }
+    got = {}
+    for name, vecs in cases.items():
+        src, out = str(tmp_path / f"{name}_in"), str(tmp_path / f"{name}_out")
+        storage.write_table(spark.createDataFrame(
+            [(i, x) for i, x in enumerate(vecs)],
+            "vec_id long, embedding array<double>"), src)
+        assert cli.main(["--stage", "semdedup", "--input", src,
+                         "--output", out, "--n-clusters", "8",
+                         "--threshold", "0.9"]) == 0
+        got[name] = json.loads(
+            capsys.readouterr().out.strip().splitlines()[-1])
+
+    assert got == {
+        "one": {"vectors": 1, "kept": 1, "dropped": 0},
+        "same5": {"vectors": 5, "kept": 1, "dropped": 4},
+        "zero3": {"vectors": 3, "kept": 3, "dropped": 0},
+        "rand3": {"vectors": 3, "kept": 3, "dropped": 0},
+    }

@@ -191,11 +191,11 @@ def test_passage_spans_recomputes_not_checkpoints(spark):
 
 
 def test_semdedup_plan_shape(spark):
-    """SemDeDup's scale claims, visible in the plan: no cartesian
-    product anywhere (the pair search is an equi-join on cluster id),
-    and the candidate self-join runs on the keys-only routing table —
-    embedding payloads appear in the scoring joins, not the bucket
-    join."""
+    """SemDeDup's scale claims, visible in the plan: the pair search is
+    ONE per-cluster grouped scorer (FlatMapGroupsInPandas) — no
+    cartesian product and no join keyed on the cluster id, i.e. no
+    same-cluster id-pair materialization anywhere. The only join is the
+    id join that brings each vector's cluster to its payload."""
     from apollon_spark.ml.semdedup import semantic_dup_pairs
     rng = np.random.default_rng(5)
     vecs = rng.standard_normal((200, 8))
@@ -204,9 +204,11 @@ def test_semdedup_plan_shape(spark):
         "embedding": list(vecs)}))
     pairs = semantic_dup_pairs(df, 0.5, centroids=vecs[:4])
     plan = _plan(pairs)
-    assert "CartesianProduct" not in plan
-    assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan \
-        or "BroadcastHashJoin" in plan
+    assert plan.count("FlatMapGroupsInPandas") == 1, plan
+    assert "CartesianProduct" not in plan, plan
+    for line in plan.splitlines():
+        if "Join" in line:
+            assert "cluster" not in line, line
 
 
 def test_passage_canonical_pick_is_aggregate_not_window(spark):

@@ -19,6 +19,24 @@ def emb(spark):
     return spark.createDataFrame(pdf), vecs
 
 
+@pytest.fixture(scope="module")
+def planted(spark):
+    """One planted cluster of 2.5 scoring tiles (8-d): 320 random
+    directions plus a near-copy of each, rows shuffled so duplicate
+    pairs land both inside one tile and across tiles. Centroid 0 is the
+    mass's mean, centroid 1 is far away, so every vector routes to
+    cluster 0."""
+    n = semdedup._TILE * 5 // 2
+    rng = np.random.default_rng(8)
+    base = rng.standard_normal((n // 2, 8)) + 3.0
+    vecs = np.concatenate([base, base + 1e-3 * rng.standard_normal(
+        base.shape)])[rng.permutation(n)]
+    pdf = pd.DataFrame({"vec_id": np.arange(n, dtype="int64"),
+                        "embedding": list(vecs)})
+    cents = np.stack([vecs.mean(axis=0), -10.0 * np.ones(8)])
+    return spark.createDataFrame(pdf), vecs, cents
+
+
 def _brute(vecs, centroids, threshold):
     """Numpy oracle: (assign, centroid_sim, same-cluster pairs >= thr)."""
     c = np.asarray(centroids, "float64")
@@ -28,13 +46,31 @@ def _brute(vecs, centroids, threshold):
     cn = c / np.linalg.norm(c, axis=1, keepdims=True)
     csim = np.einsum("ij,ij->i", vn, cn[cl])
     sims = vn @ vn.T
+    # vectorized prefilter, then the scalar round() decides
+    iu, ju = np.triu_indices(len(vecs), k=1)
+    near = (cl[iu] == cl[ju]) & (sims[iu, ju] >= threshold - 1e-6)
     pairs = {}
-    n = len(vecs)
-    for i in range(n):
-        for j in range(i + 1, n):
-            if cl[i] == cl[j] and round(sims[i, j], 6) >= threshold:
-                pairs[(i, j)] = round(sims[i, j], 6)
+    for i, j in zip(iu[near].tolist(), ju[near].tolist()):
+        if round(sims[i, j], 6) >= threshold:
+            pairs[(i, j)] = round(sims[i, j], 6)
     return cl, csim, pairs
+
+
+def _assert_pairs_match(df, vecs, cents, threshold):
+    got = semdedup.semantic_dup_pairs(df, threshold,
+                                      centroids=cents).toPandas()
+    cl, _, want = _brute(vecs, cents, threshold)
+    got_pairs = {(int(r.id_a), int(r.id_b)): r.cos_sim
+                 for r in got.itertuples()}
+    assert len(got_pairs) == len(got)   # no pair emitted twice
+    assert got_pairs.keys() == want.keys()
+    for k, v in want.items():
+        assert abs(got_pairs[k] - v) < 1e-9
+    # every pair really is same-cluster
+    for r in got.itertuples():
+        assert cl[int(r.id_a)] == cl[int(r.id_b)] == r.cluster
+    assert len(want) > 0  # fixture actually exercises the path
+    return want
 
 
 def test_assign_matches_numpy(spark, emb):
@@ -50,18 +86,59 @@ def test_assign_matches_numpy(spark, emb):
 
 def test_dup_pairs_match_numpy(spark, emb):
     df, vecs = emb
-    cents = vecs[:5]
-    got = semdedup.semantic_dup_pairs(df, 0.9, centroids=cents).toPandas()
-    cl, _, want = _brute(vecs, cents, 0.9)
-    got_pairs = {(int(r.id_a), int(r.id_b)): r.cos_sim
-                 for r in got.itertuples()}
-    assert got_pairs.keys() == want.keys()
-    for k, v in want.items():
-        assert abs(got_pairs[k] - v) < 1e-9
-    # every pair really is same-cluster
-    for r in got.itertuples():
-        assert cl[int(r.id_a)] == cl[int(r.id_b)] == r.cluster
-    assert len(want) > 0  # fixture actually exercises the path
+    _assert_pairs_match(df, vecs, vecs[:5], 0.9)
+
+
+def test_dup_pairs_cross_tile_match_numpy(spark, planted):
+    """A cluster larger than two scoring tiles: pairs inside the
+    diagonal tiles and across tiles all match the oracle, none twice."""
+    df, vecs, cents = planted
+    want = _assert_pairs_match(df, vecs, cents, 0.98)
+    t = semdedup._TILE
+    tiles = {(i // t, j // t) for i, j in want}
+    assert any(a == b for a, b in tiles) and any(a != b for a, b in tiles)
+
+
+def test_cluster_pairs_memory_is_tiled():
+    """Scoring one n = 4096 cluster must peak well below one n×n
+    float64 similarity matrix (a quarter of it here): memory is
+    O(n·dim + tile·n), not O(n²)."""
+    import tracemalloc
+
+    n = 4096
+    rng = np.random.default_rng(3)
+    x = rng.standard_normal((n, 8))
+    x[-1] = x[0]                      # one pair across first/last tile
+    ids = np.arange(n, dtype="int64")
+    tracemalloc.start()
+    try:
+        a, b, s = semdedup._cluster_pairs(ids, x, 0.999)
+        _, peak = tracemalloc.get_traced_memory()
+    finally:
+        tracemalloc.stop()
+    assert peak < n * n * 8 / 4, peak
+    assert (0, n - 1) in set(zip(a.tolist(), b.tolist()))
+    assert (a < b).all() and (s >= 0.999).all()
+
+
+def test_cluster_pairs_zero_norm_scores_zero():
+    """A zero vector scores 0 against everything (never NaN): at
+    threshold 0 it pairs with every other row at cos_sim 0.0."""
+    x = np.array([[0.0, 0.0], [1.0, 0.0], [2.0, 0.0]])
+    a, b, s = semdedup._cluster_pairs(np.array([5, 7, 9]), x, 0.0)
+    got = dict(zip(zip(a.tolist(), b.tolist()), s.tolist()))
+    assert got == {(5, 7): 0.0, (5, 9): 0.0, (7, 9): 1.0}
+
+
+def test_semantic_dedup_builds_without_user_warning(spark, emb):
+    """applyInPandas warns when it cannot infer an eval type from
+    partial type hints; the grouped scorer must not trigger it."""
+    import warnings
+
+    df, vecs = emb
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", UserWarning)
+        semdedup.semantic_dedup(df, 0.9, centroids=vecs[:5])
 
 
 def test_dedup_verdict(spark, emb):
@@ -136,37 +213,3 @@ def test_empty_input_default_centroids(spark):
     assert out.count() == 0
     assert out.columns == ["id", "cluster", "centroid_sim",
                            "group_id", "keep"]
-
-
-def test_grouped_pairs_equal_join_pairs(spark, emb):
-    """VERDICT r04 #6: the per-cluster applyInPandas scoring variant
-    must emit exactly the pair set and similarities of the
-    pair-materializing join form, and the verdict pipeline must be
-    identical under either pair_method."""
-    df, vecs = emb
-    cents = vecs[:5]
-    join_p = semdedup.semantic_dup_pairs(df, 0.9, centroids=cents) \
-        .toPandas()
-    grp_p = semdedup.semantic_dup_pairs_grouped(df, 0.9, centroids=cents) \
-        .toPandas()
-    jk = {(int(r.id_a), int(r.id_b)): (int(r.cluster), r.cos_sim)
-          for r in join_p.itertuples()}
-    gk = {(int(r.id_a), int(r.id_b)): (int(r.cluster), r.cos_sim)
-          for r in grp_p.itertuples()}
-    assert jk.keys() == gk.keys() and len(jk) > 0
-    for k in jk:
-        assert jk[k][0] == gk[k][0]
-        np.testing.assert_allclose(jk[k][1], gk[k][1], rtol=0, atol=1e-9)
-
-    vj = semdedup.semantic_dedup(df, 0.9, centroids=cents,
-                                 pair_method="join").toPandas() \
-        .sort_values("id").reset_index(drop=True)
-    vg = semdedup.semantic_dedup(df, 0.9, centroids=cents,
-                                 pair_method="grouped").toPandas() \
-        .sort_values("id").reset_index(drop=True)
-    assert vj["keep"].tolist() == vg["keep"].tolist()
-    assert vj["group_id"].tolist() == vg["group_id"].tolist()
-
-    with pytest.raises(ValueError, match="pair_method"):
-        semdedup.semantic_dedup(df, 0.9, centroids=cents,
-                                pair_method="bogus")
