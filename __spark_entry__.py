@@ -663,8 +663,9 @@ def _q_battery_paths(spark, sf_dir):
     halo-split batteries in ONE path-tagged gate. Both pipelines still
     execute in full and value-check against the same time-domain SQL
     (split == unsplit is bit-equal, pytest-proven, so the oracle is
-    the battery SQL twice with path tags). Bench times the halves
-    separately."""
+    the battery SQL twice with path tags). Bench times the union as
+    one gate; the halves are ``_q_battery_time`` and
+    ``_q_features_split``."""
     fast = _q_battery_time(spark, sf_dir) \
         .select(F.lit("fast").alias("path"), "*")
     split = _q_features_split(spark, sf_dir) \
@@ -721,8 +722,8 @@ def _q_cosine_semantic(spark, sf_dir):
 def _q_cosine_neardup_all(spark, sf_dir):
     """Registry consolidation (r04, 50-gate cap): brute-force,
     LSH-mined and SemDeDup within-cluster embedding near-dup in ONE
-    method-tagged gate — same device as asof_options. Bench still
-    times the halves separately (bench.py)."""
+    method-tagged gate — same device as asof_options. Bench times the
+    union as one gate."""
     brute = _q_cosine_neardup(spark, sf_dir) \
         .select(F.lit("brute").alias("method"), "id_a", "id_b", "cos_sim")
     lsh = _q_cosine_neardup_lsh(spark, sf_dir) \
@@ -737,8 +738,8 @@ def _q_ann_all(spark, sf_dir):
     """Registry consolidation (r04, 50-gate cap): the LSH-ANN top-5
     rank cut and the rank-free rerank threshold cut in ONE
     method-tagged gate (rerank rows carry rank 0 — the cut is
-    deliberately rank-free there). Bench times the halves
-    separately."""
+    deliberately rank-free there). Bench times the union as one
+    gate."""
     topk = _q_ann_lsh(spark, sf_dir) \
         .select(F.lit("topk").alias("method"), "q_id", "rank", "id", "sim")
     rerank = _q_ann_rerank(spark, sf_dir) \
@@ -1131,8 +1132,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     ann_rerank -> ann_lsh, and features_split -> battery_time,
     method/path-tagged unions freeing the slots the new
     peak_scan/hmm_estep/dup_passages gates take; per-option coverage
-    stays in pytest and the bench still times merged halves
-    separately). ``asof_strategies`` keeps its name but checks the one
+    stays in pytest). bench.py times exactly these keys, each under a
+    plan fingerprint. ``asof_strategies`` keeps its name but checks the one
     as-of path (the union sort-merge) against DuckDB ASOF LEFT JOIN.
     New gates and any that missed an evaluation window in a previous
     round lead the dict. Since r05 every gate is value-oracled (zero

@@ -222,19 +222,18 @@ def fit_hmm_docs(docs: DataFrame, m_states: int = 3,
                  init_gamma_method: str = "uniform",
                  init_delta_method: str = "stationary",
                  fill_diag: float = 0.8, max_iter: int = 1000,
-                 tol: float = 1e-5, max_obs: int | None = None,
-                 spread: bool = True) -> DataFrame:
+                 tol: float = 1e-5, max_obs: int | None = None) -> DataFrame:
     """One fitted Poisson HMM per doc — shuffle-free mapInPandas.
 
     ``max_obs``: optionally fit on the first N observations (bounds
     per-doc EM cost on whales; the regime structure is stationary).
 
-    ``spread``: EM is ~100x more CPU per byte than the feature
-    battery, so a compact input (e.g. one small parquet file = ONE
-    scan partition) would serialize the whole fit into one task. When
-    the input has fewer partitions than ``defaultParallelism``, spend
-    one round-robin shuffle of (doc_id, tokens) to use every core —
-    at real scale inputs have >= that many partitions and this is a
+    EM is ~100x more CPU per byte than the feature battery, so a
+    compact input (e.g. one small parquet file = ONE scan partition)
+    would serialize the whole fit into one task. When the input has
+    fewer partitions than ``defaultParallelism``, the fit spends one
+    round-robin shuffle of (doc_id, tokens) to use every core — at
+    real scale inputs have >= that many partitions and this is a
     no-op."""
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -262,9 +261,7 @@ def fit_hmm_docs(docs: DataFrame, m_states: int = 3,
                 "aic", "bic", "n_iter", "success"])
 
     from .session import spread_compact
-    src = docs.select("doc_id", "tokens")
-    if spread:
-        src = spread_compact(src)
+    src = spread_compact(docs.select("doc_id", "tokens"))
     return src.mapInPandas(gen, HMM_SCHEMA)
 
 
@@ -457,7 +454,7 @@ def estep_posteriors(x: np.ndarray, btab: np.ndarray,
 
 
 def estep_docs(docs: DataFrame, lam, gamma, delta,
-               spread: bool = True, max_x: int = 255) -> DataFrame:
+               max_x: int = 255) -> DataFrame:
     """Per-doc E-step posteriors on fixed parameters — one mapInPandas
     over (doc_id, tokens), long-form output
     (doc_id, t, alpha0, cscale, post0, post1 [, post2, ...]). The b
@@ -466,11 +463,10 @@ def estep_docs(docs: DataFrame, lam, gamma, delta,
     gate's bit-exact twin); any other m uses the vectorized
     ``estep_posteriors``.
 
-    ``spread``: like ``fit_hmm_docs`` — the per-doc scan is CPU-bound
-    Python, so a compact input (one small parquet file = one scan
-    partition) would serialize every doc into a single task; spend one
-    round-robin shuffle when the input has fewer partitions than the
-    cluster (a no-op at real scale). ``max_x`` bounds the emission
+    Like ``fit_hmm_docs``, the per-doc scan is CPU-bound Python, so a
+    compact input (one small parquet file = one scan partition) is
+    spread with one round-robin shuffle when it has fewer partitions
+    than the cluster (a no-op at real scale). ``max_x`` bounds the emission
     table (default byte-range token ids); the kernel raises a
     descriptive ValueError for token ids past it."""
     btab = estep_b_table(lam, max_x=max_x)
@@ -501,9 +497,7 @@ def estep_docs(docs: DataFrame, lam, gamma, delta,
                 yield pd.concat(out, ignore_index=True)
 
     from .session import spread_compact
-    src = docs.select("doc_id", "tokens")
-    if spread:
-        src = spread_compact(src)
+    src = spread_compact(docs.select("doc_id", "tokens"))
     post_cols = ", ".join(f"post{j} double" for j in range(m))
     return src.mapInPandas(
         gen, f"doc_id string, t int, alpha0 double, cscale double, "
@@ -515,7 +509,7 @@ EM_STEP_COLS = ["lam0_next", "lam1_next", "g00_next", "g01_next",
 
 
 def em_step_docs(docs: DataFrame, lam, gamma, delta,
-                 spread: bool = True, max_x: int = 255) -> DataFrame:
+                 max_x: int = 255) -> DataFrame:
     """Per-doc E-step posteriors PLUS the one-iteration M-step update
     on fixed (λ, Γ, δ), m=2 — one mapInPandas over (doc_id, tokens),
     long-form (doc_id, t, alpha0, cscale, post0, post1) with the
@@ -550,9 +544,7 @@ def em_step_docs(docs: DataFrame, lam, gamma, delta,
                 yield pd.concat(out, ignore_index=True)
 
     from .session import spread_compact
-    src = docs.select("doc_id", "tokens")
-    if spread:
-        src = spread_compact(src)
+    src = spread_compact(docs.select("doc_id", "tokens"))
     upd_cols = ", ".join(f"{k} double" for k in EM_STEP_COLS)
     return src.mapInPandas(
         gen, f"doc_id string, t int, alpha0 double, cscale double, "
@@ -603,7 +595,7 @@ def _quant16(v: float) -> float:
 
 
 def em_two_iter_docs(docs: DataFrame, lam, gamma, delta,
-                     spread: bool = True, max_x: int = 255) -> DataFrame:
+                     max_x: int = 255) -> DataFrame:
     """TWO chained EM iterations per doc on a fixed global init — the
     som_train 2-epoch unrolling device applied to EM TRAINING
     (VERDICT r04 #3): iteration 2's (λ,Γ,δ) input is iteration 1's
@@ -650,9 +642,7 @@ def em_two_iter_docs(docs: DataFrame, lam, gamma, delta,
                 yield pd.DataFrame(out, columns=cols)
 
     from .session import spread_compact
-    src = docs.select("doc_id", "tokens")
-    if spread:
-        src = spread_compact(src)
+    src = spread_compact(docs.select("doc_id", "tokens"))
     return src.mapInPandas(
         gen, "doc_id string, n_tok int, "
              + ", ".join(f"{c} double" for c in cols[2:]))

@@ -199,29 +199,6 @@ def lsh_candidate_pairs(sigs: DataFrame, n_bands: int,
     )
 
 
-def lsh_candidate_pairs_between(sigs_new: DataFrame, sigs_all: DataFrame,
-                                n_bands: int,
-                                id_col: str = "doc_id") -> DataFrame:
-    """Distinct candidate pairs where at least one side is in
-    ``sigs_new`` (which must be a subset of ``sigs_all``): bands each
-    side and equi-joins new-banded x all-banded on (band, band_sig) —
-    per-batch cost scales with the NEW side's bucket collisions, never
-    a store-vs-store self-join. Pairs are normalized to id_a < id_b
-    (a new-new pair appears from both orientations and dedups)."""
-    a = _band_sigs(sigs_new, n_bands, id_col).alias("a")
-    b = _band_sigs(sigs_all, n_bands, id_col).alias("b")
-    return (
-        a.join(b, (F.col("a.band") == F.col("b.band"))
-               & (F.col("a.band_sig") == F.col("b.band_sig"))
-               & (F.col(f"a.{id_col}") != F.col(f"b.{id_col}")))
-        .select(F.least(F.col(f"a.{id_col}"), F.col(f"b.{id_col}"))
-                .alias("id_a"),
-                F.greatest(F.col(f"a.{id_col}"), F.col(f"b.{id_col}"))
-                .alias("id_b"))
-        .distinct()
-    )
-
-
 def signature_est_jaccard_udf():
     """Arrow-batched MinHash-agreement estimator: fraction of equal
     signature slots, one numpy comparison per batch instead of an

@@ -19,9 +19,10 @@ Scale design (the whole point of the clustering step):
   the per-bucket quadratic, exactly like bands/planes bound the LSH
   miners in ``dedup.py``.
 - Centroids are tiny (k × dim) and broadcast; routing is ONE Arrow
-  pass over the corpus (no shuffle).
+  pass over the corpus (no shuffle) that carries each vector on to
+  the scorer.
 - Pairs are mined by ONE per-cluster ``applyInPandas`` BLAS scorer
-  (no candidate id-pair shuffle, no per-pair payload join): each
+  (no candidate id-pair shuffle, no payload join): each
   cluster is scored in fixed row tiles, so a task holds |c|×dim plus
   one tile×|c| block, never the |c|² matrix.
 - Group resolution reuses ``connected_components`` at PAIR scale
@@ -79,7 +80,9 @@ def semantic_assign(vectors: DataFrame, centroids: np.ndarray,
     lowest cluster id — np.argmin convention, mirrored by the oracle's
     ``row_number() ORDER BY d2, cl``) and score its cosine similarity
     to that centroid (the keep-policy signal). One mapInPandas pass,
-    centroids broadcast: (id, cluster, centroid_sim)."""
+    centroids broadcast: (id, cluster, centroid_sim, v). The vector
+    rides along as ``v`` (array<double>) so the per-cluster scorer
+    reads it from this pass instead of a second scan and an id join."""
     cents = np.asarray(centroids, "float64")
     spark = vectors.sparkSession
     bc = spark.sparkContext.broadcast(cents)
@@ -91,17 +94,19 @@ def semantic_assign(vectors: DataFrame, centroids: np.ndarray,
         for pdf in batches:
             if not len(pdf):
                 continue
-            x = np.stack([np.asarray(v, "float64") for v in pdf[vec_col]])
+            x = np.stack([np.asarray(v, "float64") for v in pdf["v"]])
             d2 = ((x[:, None, :] - cc[None, :, :]) ** 2).sum(-1)
             cl = d2.argmin(axis=1).astype("int32")
             xn = x / np.maximum(np.linalg.norm(x, axis=1, keepdims=True),
                                 1e-300)
             sim = np.einsum("ij,ij->i", xn, cn[cl])
-            yield pd.DataFrame({"id": pdf[id_col].to_numpy(),
-                                "cluster": cl, "centroid_sim": sim})
+            yield pd.DataFrame({"id": pdf["id"], "cluster": cl,
+                                "centroid_sim": sim, "v": pdf["v"]})
 
-    return vectors.select(id_col, vec_col).mapInPandas(
-        assign, "id long, cluster int, centroid_sim double")
+    return vectors.select(
+        F.col(id_col).cast("long").alias("id"),
+        F.col(vec_col).cast("array<double>").alias("v")).mapInPandas(
+        assign, "id long, cluster int, centroid_sim double, v array<double>")
 
 
 def _cluster_pairs(ids: np.ndarray, x: np.ndarray,
@@ -144,13 +149,29 @@ def _cluster_pairs(ids: np.ndarray, x: np.ndarray,
             np.concatenate(out_s))
 
 
+def _score_clusters(routed: DataFrame, threshold: float) -> DataFrame:
+    """One ``applyInPandas`` per cluster over ``semantic_assign``'s
+    (id, cluster, v) rows: the tiled BLAS scorer ``_cluster_pairs``."""
+
+    # unannotated on purpose: a partial annotation makes applyInPandas
+    # warn that it cannot infer the eval type from the hints
+    def score(key, pdf):
+        x = np.stack([np.asarray(r, "float64") for r in pdf["v"]])
+        a, b, s = _cluster_pairs(pdf["id"].to_numpy(), x, threshold)
+        return pd.DataFrame({
+            "cluster": np.full(len(a), key[0], dtype="int32"),
+            "id_a": a, "id_b": b, "cos_sim": s})
+
+    return routed.select("id", "cluster", "v").groupBy("cluster") \
+        .applyInPandas(score, PAIR_SCHEMA)
+
+
 def semantic_dup_pairs(vectors: DataFrame, threshold: float,
                        n_clusters: int = 8,
                        centroids: np.ndarray | None = None,
                        sample_size: int = 2048, seed: int = 13,
                        id_col: str = "vec_id",
-                       vec_col: str = "embedding",
-                       assign: DataFrame | None = None) -> DataFrame:
+                       vec_col: str = "embedding") -> DataFrame:
     """Within-cluster near-duplicate pairs: (cluster, id_a, id_b,
     cos_sim) for every same-cluster pair with cosine >= ``threshold``,
     id_a < id_b, cos_sim rounded half-up to 6 decimals.
@@ -159,40 +180,23 @@ def semantic_dup_pairs(vectors: DataFrame, threshold: float,
     vectors, making the stage a deterministic function of its inputs —
     the contract gate passes the first rows of the corpus so the SQL
     oracle can re-derive routing and scoring exactly (same device as
-    ``ivf_candidates``/``som_train``). ``assign`` lets a caller that
-    already routed the corpus (``semantic_dedup``) pass its (id,
-    cluster, ...) table in, so the routing scan runs once.
+    ``ivf_candidates``/``som_train``).
 
-    One ``applyInPandas`` per cluster scores the cluster in BLAS row
-    tiles (``_cluster_pairs``): no same-cluster id-pair
-    materialization and no per-pair payload join before the threshold
-    cut, and a task holds one cluster's |c|×dim block plus one
-    ``_TILE``×|c| tile. A pair-materializing self-join was measured
-    ~12× slower on exactly the oversized clusters it was meant to
-    serve (SCALE.md §6i), so this is the only miner."""
-    if assign is None:
-        if centroids is None:
-            centroids = _default_centroids(vectors, id_col, vec_col,
-                                           n_clusters, sample_size, seed)
-            if centroids is None:    # empty corpus
-                return vectors.sparkSession.createDataFrame(
-                    [], PAIR_SCHEMA)
-        assign = semantic_assign(vectors, centroids, id_col, vec_col)
-
-    v = vectors.select(F.col(id_col).cast("long").alias("id"),
-                       F.col(vec_col).cast("array<double>").alias("v"))
-    data = v.join(assign.select("id", "cluster"), "id")
-
-    # unannotated on purpose: a partial annotation makes applyInPandas
-    # warn that it cannot infer the eval type from the hints
-    def score(key, pdf):
-        x = np.stack([np.asarray(r, "float64") for r in pdf["v"].to_numpy()])
-        a, b, s = _cluster_pairs(pdf["id"].to_numpy(), x, threshold)
-        return pd.DataFrame({
-            "cluster": np.full(len(a), key[0], dtype="int32"),
-            "id_a": a, "id_b": b, "cos_sim": s})
-
-    return data.groupBy("cluster").applyInPandas(score, PAIR_SCHEMA)
+    The routing pass carries each vector into one ``applyInPandas``
+    per cluster, which scores the cluster in BLAS row tiles
+    (``_cluster_pairs``): one scan of the vector table, no id join, no
+    same-cluster id-pair materialization, and a task holds one
+    cluster's |c|×dim block plus one ``_TILE``×|c| tile. A
+    pair-materializing self-join was measured ~12× slower on exactly
+    the oversized clusters it was meant to serve (SCALE.md §6i), so
+    this is the only miner."""
+    if centroids is None:
+        centroids = _default_centroids(vectors, id_col, vec_col,
+                                       n_clusters, sample_size, seed)
+        if centroids is None:        # empty corpus
+            return vectors.sparkSession.createDataFrame([], PAIR_SCHEMA)
+    return _score_clusters(
+        semantic_assign(vectors, centroids, id_col, vec_col), threshold)
 
 
 def semantic_dedup(vectors: DataFrame, threshold: float,
@@ -210,11 +214,13 @@ def semantic_dedup(vectors: DataFrame, threshold: float,
     (paper §3 keep policy; ties -> lowest id). Vectors in no pair are
     singleton groups with keep=1.
 
-    The corpus is routed once (checkpointed) and handed to
-    ``semantic_dup_pairs``, whose per-cluster tiled BLAS scorer is the
-    one pair miner. Components run at pair scale; the keep pick is one
-    min-by-struct aggregate over groups and one join back on the group
-    key."""
+    One routing plan feeds both the per-cluster tiled BLAS scorer
+    (the one pair miner) and the verdict table, whose (id, cluster,
+    centroid_sim) columns are checkpointed without the vectors: the
+    vector table is scanned once for the pairs and once for the
+    checkpoint, and no id join brings payloads back. Components run at
+    pair scale; the keep pick is one min-by-struct aggregate over
+    groups and one join back on the group key."""
     if centroids is None:
         centroids = _default_centroids(vectors, id_col, vec_col,
                                        n_clusters, sample_size, seed)
@@ -222,10 +228,10 @@ def semantic_dedup(vectors: DataFrame, threshold: float,
             return vectors.sparkSession.createDataFrame(
                 [], VERDICT_SCHEMA)
 
-    assign = semantic_assign(vectors, centroids, id_col, vec_col) \
+    routed = semantic_assign(vectors, centroids, id_col, vec_col)
+    assign = routed.select("id", "cluster", "centroid_sim") \
         .localCheckpoint(eager=False)
-    pairs = semantic_dup_pairs(vectors, threshold, id_col=id_col,
-                               vec_col=vec_col, assign=assign)
+    pairs = _score_clusters(routed, threshold)
     comp = connected_components(pairs.select("id_a", "id_b"),
                                 max_iter=max_iter)
     base = (assign

@@ -22,16 +22,15 @@ NONLINEAR_SCHEMA = ("doc_id string, cdim double, correlogram double, "
 
 def extract_nonlinear(docs: DataFrame, corr_wlen: int = 50,
                       corr_delay: int = 10,
-                      max_samples: int = 4096,
-                      spread: bool = True) -> DataFrame:
+                      max_samples: int = 4096) -> DataFrame:
     """Per-doc nonlinear battery on the first ``max_samples`` tokens:
     Bader cdim (if >= 2400 samples), total correlogram, acf stats.
 
-    ``spread``: cdim/correlogram are heavily CPU-bound per doc, so a
-    compact input (one small parquet file = one scan partition) would
-    serialize the stage; below defaultParallelism partitions, spend
-    one round-robin shuffle to use every core (no-op at real scale —
-    same policy as hmm.fit_hmm_docs)."""
+    cdim/correlogram are heavily CPU-bound per doc, so a compact input
+    (one small parquet file = one scan partition) would serialize the
+    stage; below defaultParallelism partitions it spends one
+    round-robin shuffle to use every core (no-op at real scale — same
+    policy as hmm.fit_hmm_docs)."""
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         cdim_need = (2400 - 10 - 1) + 79 * 14 + 1   # default delay/m_dim
@@ -59,10 +58,8 @@ def extract_nonlinear(docs: DataFrame, corr_wlen: int = 50,
                 "doc_id", "cdim", "correlogram", "acf_lag1", "acf_min_lag"])
 
     from .session import spread_compact
-    src = docs.select("doc_id", "tokens")
-    if spread:
-        src = spread_compact(src)
-    return src.mapInPandas(gen, NONLINEAR_SCHEMA)
+    return spread_compact(docs.select("doc_id", "tokens")) \
+        .mapInPandas(gen, NONLINEAR_SCHEMA)
 
 
 def bandpass_docs(docs: DataFrame, fps: int, low: float, high: float,

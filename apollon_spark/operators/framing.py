@@ -167,7 +167,7 @@ CHUNKS_COLS = ["doc_id", "seg_base", "n_local_segs", "chunk_tokens",
 
 def split_docs_halo(docs: DataFrame, p: FramingParams,
                     chunk_segs: int = 4096, flux_halo: int = 1,
-                    exchange: bool = True, causal: bool = False) -> DataFrame:
+                    causal: bool = False) -> DataFrame:
     """Split each doc into chunks of <= ``chunk_segs`` segments with a
     halo so each segment is produced by exactly one chunk.
 
@@ -233,16 +233,14 @@ def split_docs_halo(docs: DataFrame, p: FramingParams,
         halo_lo.cast("int").alias("halo_lo"),
         halo_hi.cast("int").alias("halo_hi"),
     )
-    if exchange:
-        # The explode is narrow: without an exchange every chunk of a
-        # whale stays in its parent scan partition, so one task still
-        # owns the whole whale and becomes a fixed straggler no number
-        # of cores can absorb. This round-robin shuffle IS the halo
-        # exchange — it moves chunk rows (same total bytes as the
-        # input) exactly once and is what buys whale parallelism.
-        sc = docs.sparkSession.sparkContext
-        out = out.repartition(3 * sc.defaultParallelism)
-    return out
+    # The explode is narrow: without an exchange every chunk of a whale
+    # stays in its parent scan partition, so one task still owns the
+    # whole whale and becomes a fixed straggler no number of cores can
+    # absorb. This round-robin shuffle IS the halo exchange — it moves
+    # chunk rows (same total bytes as the input) exactly once and is
+    # what buys whale parallelism.
+    sc = docs.sparkSession.sparkContext
+    return out.repartition(3 * sc.defaultParallelism)
 
 
 # ---------------------------------------------------------------------------

@@ -98,15 +98,15 @@ def get_spark(
     return spark
 
 
-def spread_compact(df, min_ratio: int = 1):
+def spread_compact(df):
     """Round-robin repartition a DataFrame IF it has fewer partitions
-    than ``min_ratio * defaultParallelism`` — the compact-input guard
+    than ``defaultParallelism`` — the compact-input guard
     for CPU-heavy per-doc stages (EM, cdim, fused onsets): one small
     parquet file is ONE scan partition, which would serialize the
     whole stage into a single task. At real scale inputs carry at
     least cores-many partitions and this is a no-op, preserving the
     zero-shuffle plan."""
-    par = df.sparkSession.sparkContext.defaultParallelism * min_ratio
+    par = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < par:
         return df.repartition(par)
     return df

@@ -207,20 +207,19 @@ def _finalize_sharpness(df: DataFrame) -> DataFrame:
 
 
 def extract_features(docs: DataFrame, cfg: FeatureConfig = FeatureConfig(),
-                     split: bool = False, chunk_segs: int = 1024,
-                     exchange: bool = True) -> DataFrame:
+                     split: bool = False,
+                     chunk_segs: int = 1024) -> DataFrame:
     """Per (doc, segment) feature battery.
 
     ``split=False``: one mapInPandas over whole docs — zero shuffles
     before the (small) sharpness window.
-    ``split=True``: halo-split chunks first (skewed long docs); same
-    output, exactly. ``exchange`` plumbs through to
-    ``split_docs_halo`` — set False to skip the round-robin chunk
-    shuffle when the input is already well-spread.
+    ``split=True``: halo-split chunks first (skewed long docs), spread
+    by ``split_docs_halo``'s round-robin chunk exchange; same output,
+    exactly.
     """
     p = cfg.framing
     if split:
-        return _extract_split(docs, cfg, chunk_segs, exchange)
+        return _extract_split(docs, cfg, chunk_segs)
 
     n_perseg, n_overlap = p.n_perseg, p.n_overlap
     extend, pad, causal = p.extend, p.pad, cfg.causal
@@ -279,11 +278,11 @@ def extract_features(docs: DataFrame, cfg: FeatureConfig = FeatureConfig(),
 
 
 def _extract_split(docs: DataFrame, cfg: FeatureConfig,
-                   chunk_segs: int, exchange: bool = True) -> DataFrame:
+                   chunk_segs: int) -> DataFrame:
     """Skew path: chunked extraction with flux halo."""
     p = cfg.framing
     chunks = split_docs_halo(docs, p, chunk_segs=chunk_segs, flux_halo=1,
-                             exchange=exchange, causal=cfg.causal)
+                             causal=cfg.causal)
     n_perseg, n_overlap, step = p.n_perseg, p.n_overlap, p.step
     # causal centers are i*step (kernels.causal_frame_signal); the
     # chunk slice already starts n_perseg-1 before the owned segment,

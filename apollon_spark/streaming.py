@@ -229,8 +229,8 @@ def store_meta_guard(store_path: str, params: dict,
         json.dump(params, fh)
 
 
-def banded_store_read(spark, store_path: str, keys, epoch_id: int,
-                      exclude_epoch: bool = True) -> DataFrame | None:
+def banded_store_read(spark, store_path: str, keys,
+                      epoch_id: int) -> DataFrame | None:
     """Partition-pruned read of the pre-banded signature store: only
     the ``(band, pfx)`` partitions in ``keys`` are scanned (and the
     current epoch's own partial attempt is excluded). ``keys`` is a
@@ -254,11 +254,9 @@ def banded_store_read(spark, store_path: str, keys, epoch_id: int,
     for band, pfs in sorted(by_band.items()):
         bucket_filter = bucket_filter | (
             (F.col("band") == band) & F.col("pfx").isin(pfs))
-    if exclude_epoch:
-        # a replayed batch must not see its own prior partial attempt
-        # (it would double every doc)
-        bucket_filter = bucket_filter & (F.col("epoch") != epoch_id)
-    return store.where(bucket_filter)
+    # a replayed batch must not see its own prior partial attempt (it
+    # would double every doc)
+    return store.where(bucket_filter & (F.col("epoch") != epoch_id))
 
 
 def stream_minhash_neardup(spark, src_path: str, store_path: str,

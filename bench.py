@@ -2,24 +2,39 @@
 """Benchmark harness.
 
 Prints ONE JSON line:
-  {"metric": ..., "value": <total sec>, "unit": "sec",
-   "queries": {name: sec}, "sf": ..., "sequences_per_sec": ...}
+  {"metric": "headline_suite_sec", "value": <sum of best times>,
+   "unit": "sec", "feature_extraction_sec": ..., "sequences_per_sec": ...,
+   "queries": {gate: {"runs_sec", "best", "median", "iqr",
+                      "fingerprint"}},
+   "cpus": ..., "sf": ...}
 
 Headline workload = end-to-end feature extraction (tokenize/synthesize
 -> framed short-time analysis -> fused spectral battery) — the
-BASELINE.json metric is sequences/sec. Plus the operator suite on the
-driver-generated testdata.
+BASELINE.json metric is sequences/sec. Full mode also times every gate
+of ``__spark_entry__.queries()`` under its registry name, cold-scan
+from the testdata.
+
+A gate's fingerprint is the sha256 of its optimized logical plan with
+expression ids, lambda-variable suffixes and the sf directory
+stripped. It covers the plan, not Python UDF bodies. Two records
+compare on a gate only when fingerprint, ``cpus`` and ``sf`` all match:
+``python bench_diff.py A B``.
 
 Env:
   SPARK_GRAFT_SF_DIR   testdata dir (default /root/testdata/sf0.1)
   SPARK_GRAFT_CPUS     local parallelism (default 32)
   BENCH_MODE           "full" (default) | "features" (scaling runs)
   BENCH_DOCS           synthetic doc count override
+  BENCH_RUNS           timed headline runs (default 6)
+  BENCH_QUERY_RUNS     timed runs per gate (default 4)
 """
 from __future__ import annotations
 
+import hashlib
 import json
 import os
+import re
+import statistics
 import sys
 import time
 
@@ -110,92 +125,42 @@ def bench_features(spark, sf: float, n_docs: int | None = None) -> dict:
     }
 
 
-def _asof_skew(spark, sf_dir: str):
-    """Whale-key as-of: ONE hot user owns ~50% of all events, so one
-    window task sorts half the input (SCALE.md §"Whale-key as-of
-    evidence")."""
-    from pyspark.sql import functions as F
-
-    from apollon_spark.operators.asof import asof_join
-    ev = (spark.read.parquet(f"{sf_dir}/events.parquet")
-          .withColumn("user_id",
-                      F.when(F.col("event_id") % 2 == 0, F.lit(0))
-                      .otherwise(F.col("user_id"))))
-    clicks = (ev.where(F.col("event_type") == "click")
-              .select("user_id", "event_id",
-                      F.unix_micros(F.col("ts").cast("timestamp"))
-                      .alias("t_us")))
-    purch = (ev.where(F.col("event_type") == "purchase")
-             .select("user_id",
-                     F.unix_micros(F.col("ts").cast("timestamp"))
-                     .alias("rt"),
-                     F.round("value", 6).alias("purchase_value")))
-    return asof_join(clicks, purch, on="t_us", right_on="rt",
-                     by="user_id", value_cols=["purchase_value"])
+def plan_fingerprint(df, sf_dir: str) -> str:
+    """sha256 of the normalized optimized logical plan of ``df``."""
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    plan = plan.replace(sf_dir.rstrip("/"), "<sf>")
+    plan = re.sub(r"#\d+L?", "", plan)
+    plan = re.sub(r"\blambda (\w+?)_\d+\b", r"lambda \1", plan)
+    return hashlib.sha256(plan.encode()).hexdigest()
 
 
-def bench_queries(spark, sf_dir: str) -> dict[str, float]:
+def _timing(runs: list[float]) -> dict:
+    q1, _, q3 = (statistics.quantiles(runs, n=4, method="inclusive")
+                 if len(runs) > 1 else runs * 3)
+    return {"runs_sec": [round(r, 3) for r in runs],
+            "best": round(min(runs), 3),
+            "median": round(statistics.median(runs), 3),
+            "iqr": round(q3 - q1, 3)}
+
+
+def bench_queries(spark, sf_dir: str) -> dict[str, dict]:
+    """Every registered gate, built and counted N times. Building is
+    on the clock: some gates collect or checkpoint while they build.
+    Random JVM stalls can double or triple one cold run, so the median
+    and IQR are reported next to the best run."""
     import __spark_entry__ as entrymod
 
-    # NOTE r03: simhash merged into the minhash gate (one timing now
-    # covers both signature families — comparable-subset subtotals
-    # account for it below)
-    names = ["docs_profile", "tumbling", "segment_meta", "seg_energy",
-             "asof_union", "sessionize", "locf", "lag_delta",
-             "minhash", "knn_cosine",
-             "cosine_neardup_lsh", "text_profile", "tpch_q1",
-             "topk_orders", "join_revenue",
-             "features_battery", "features_split", "onsets",
-             "ann_lsh", "ivf_ann", "lsh_pairs", "battery_time",
-             "bmu_fixed", "hmm", "ann_rerank",
-             "pack_sequences", "contamination", "sample_stratified",
-             "vocab_topk", "dup_clusters", "peak_scan", "hmm_estep",
-             "dup_passages", "nonlinear", "cosine_semantic",
-             "similarity_position"]
-    # late-r04 gate-definition notes: features_battery gained a
-    # 6dp-round projection and dropped the constant-NaN entropy column
-    # (value-oracle conversion; same UDF work, negligible timing
-    # delta), nonlinear is newly timed (value-oracled late r04) and
-    # excluded from every comparable subtotal below.
-    qs = entrymod.queries()
-    # the registry consolidated near-duplicate gates
-    # (cosine_neardup_lsh -> cosine_neardup and ann_rerank -> ann_lsh
-    # r04, to stay within the 50-gate cap); the bench keeps
-    # timing every half separately so per-query comparisons across
-    # rounds stay name-for-name. ann_lsh here is the PRE-merge topk
-    # pipeline, matching its r02/r03 timings.
-    qs = {**qs, "asof_union": entrymod._q_asof_union,
-          "cosine_neardup_lsh": entrymod._q_cosine_neardup_lsh,
-          "cosine_semantic": entrymod._q_cosine_semantic,
-          "ann_rerank": entrymod._q_ann_rerank,
-          "ann_lsh": entrymod._q_ann_lsh,
-          "battery_time": entrymod._q_battery_time,
-          "features_split": entrymod._q_features_split}
-    # (measured r03: warm-caching the shared input scans does NOT help
-    # at this SF — the ~2s gates were single-task-UDF-bound on the
-    # one-partition compact input, fixed by spread_compact in
-    # segment_docs — so gates run cold-scan, like the driver's runs)
-    # best-of-N per query (default 4, raised from 3 in r04): this
-    # box's random JVM stalls can double or triple a single cold run;
-    # with N=2 both runs land in a stall window often enough to
-    # inflate the suite 2-3x (measured: best-of-2 34.1s vs best-of-3
-    # 14.2s), and r04's back-to-back full-suite runs still showed
-    # single gates randomly inflated 4-6x under N=3 (onsets 3.8s vs
-    # 0.6s, minhash 5.6s vs 1.0s across consecutive runs with no code
-    # change) — stall probability p per run decays as p^N. Same
-    # policy as the features bench
     n_runs = max(1, int(os.environ.get("BENCH_QUERY_RUNS", 4)))
     out = {}
-    skew_entries = {"asof_skew_union": _asof_skew}
-    for name in names + list(skew_entries):
-        fn = skew_entries.get(name) or qs[name]
-        best = None
+    for name, fn in entrymod.queries().items():
+        runs = []
         for _ in range(n_runs):
             t0 = time.time()
-            fn(spark, sf_dir).count()
-            el = time.time() - t0
-            best = el if best is None else min(best, el)
-        out[name] = round(best, 3)
+            df = fn(spark, sf_dir)
+            df.count()
+            runs.append(time.time() - t0)
+        out[name] = {**_timing(runs),
+                     "fingerprint": plan_fingerprint(df, sf_dir)}
     return out
 
 
@@ -206,76 +171,24 @@ def main() -> None:
     sf = _sf_of(sf_dir)
     spark = get_spark("apollon-bench", cpus=cpus)
 
-    queries: dict[str, float] = {}
     feat = bench_features(spark, sf)
-    queries["feature_extraction"] = feat["feature_extraction_sec"]
-    if mode == "full":
-        queries.update(bench_queries(spark, sf_dir))
-
-    total = round(sum(queries.values()), 3)
-    # the round-1 suite was 21 queries; 6 were added in round 2 and 3
-    # more in round 3, so the comparable-subset subtotals are reported
-    # alongside the full total
-    R02_ADDED = {"ann_lsh", "ivf_ann", "lsh_pairs", "battery_time",
-                 "bmu_fixed", "hmm"}
-    R03_ADDED = {"ann_rerank", "asof_skew_union", "pack_sequences",
-                 "contamination", "sample_stratified", "vocab_topk",
-                 "dup_clusters"}
-    # Gates that absorbed NEW work in r03 (docs_profile += repetition
-    # metrics; locf += edge-clip/limit columns; lag_delta += delay-
-    # embed columns; text_profile += four scrub regexp_replace passes
-    # plus four regexp_count columns — genuinely new work, not a merge
-    # of a previously-timed gate) are NOT apples-to-apples with their
-    # r01/r02 timings, so they're excluded from the comparable
-    # subtotals and reported separately. MERGES of previously-timed
-    # gates stay: minhash absorbed the old simhash entry and frames_agg
-    # absorbed the old reassembly entry — both halves were separate
-    # entries in the old suites, so including the merged timing only
-    # under-counts our side (conservative).
-    R03_GROWN = {"docs_profile", "locf", "lag_delta", "text_profile"}
-    R04_ADDED = {"peak_scan", "hmm_estep", "dup_passages", "nonlinear",
-                 "cosine_semantic"}
-    # contamination absorbed NEW work late r04 (the bigram-LM scoring
-    # columns) — same exclusion rule as R03_GROWN: not apples-to-apples
-    # with its r03 timing, so it leaves the r03-comparable subtotal
-    R04_GROWN = {"contamination"}
-    # hmm and similarity_position were REDEFINED in r05 (VERDICT r04
-    # #3/#4): the rows-only EM-to-convergence fit became the
-    # value-oracled 2-iteration training unroll, and the limit(64)
-    # free-convergence similarity pipeline became the full-corpus
-    # em2-descriptor + fixed-w0 SOM composition — different work, so
-    # both leave every earlier comparable subtotal (the free-
-    # convergence paths stay driveable via the CLI hmm/som stages
-    # and pytest)
-    R05_CHANGED = {"hmm", "similarity_position"}
-    r01_subset = round(sum(v for k, v in queries.items()
-                           if k not in R02_ADDED | R03_ADDED | R03_GROWN
-                           | R04_ADDED | R05_CHANGED), 3)
-    r02_subset = round(sum(v for k, v in queries.items()
-                           if k not in R03_ADDED | R03_GROWN | R04_ADDED
-                           | R05_CHANGED), 3)
-    r03_subset = round(sum(v for k, v in queries.items()
-                           if k not in R04_ADDED | R04_GROWN
-                           | R05_CHANGED), 3)
-    grown_subtotal = round(sum(v for k, v in queries.items()
-                               if k in R03_GROWN), 3)
+    queries = bench_queries(spark, sf_dir) if mode == "full" else {}
+    total = feat["feature_extraction_sec"] + sum(
+        q["best"] for q in queries.values())
     print(json.dumps({
         "metric": "headline_suite_sec",
-        "value": total,
+        "value": round(total, 3),
         "unit": "sec",
+        "feature_extraction_sec": feat["feature_extraction_sec"],
         "queries": queries,
-        "r01_comparable_suite_sec": r01_subset,
-        "r02_comparable_suite_sec": r02_subset,
-        "r03_comparable_suite_sec": r03_subset,
-        "r03_grown_gates_sec": grown_subtotal,
         "sf": sf,
+        "cpus": spark.sparkContext.defaultParallelism,
         "sequences_per_sec": feat["sequences_per_sec"],
         "sequences_per_sec_median": feat["sequences_per_sec_median"],
         "feature_runs_sec": feat["runs_sec"],
         "run_policy": feat["run_policy"],
         "n_docs": feat["n_docs"],
         "n_segments": feat["n_segments"],
-        "cpus": cpus,
     }))
 
 

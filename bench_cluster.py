@@ -186,8 +186,8 @@ end-to-end feature extraction (synthetic F1 docs table, {n_docs}
 docs, Zipf lengths incl. 1% whales; framing 512/256, full spectral
 battery; whales via halo-split chunk exchange). Run policy:
 best-of-{n_runs} on cached input (``BENCH_RUNS``), per-run times
-reported (this box shows random multi-second JVM GC stalls; r04 runs
-at N=8 because consecutive same-config runs spread 2-4x).
+reported (this box shows random multi-second JVM GC stalls, so
+consecutive same-config runs can spread 2-4x).
 
 ## 1. MEASURED: real standalone cluster on this host
 
