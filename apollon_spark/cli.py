@@ -14,6 +14,10 @@ from __future__ import annotations
 import argparse
 import json
 import sys
+from functools import partial
+
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 from . import storage
 from .session import get_spark
@@ -148,10 +152,38 @@ def main(argv: list[str] | None = None) -> int:
                          "distributed (sources/wav.py) — the reference "
                          "CLI's audio-file surface")
     args = ap.parse_args(argv)
+    spark = get_spark(f"apollon-{args.stage}")
+    pinned = set(spark.sparkContext._jsc.getPersistentRDDs())
+    try:
+        _run(spark, args)
+    finally:
+        # release what the stage pinned (the localCheckpoints of the
+        # cluster, pack and cut loops): its output is written by now
+        rdds = spark.sparkContext._jsc.getPersistentRDDs()
+        for rdd_id in set(rdds) - pinned:
+            rdds[rdd_id].unpersist(False)
+    return 0
+
+
+def _write(df: DataFrame, location: str, *aggs: Column,
+           **bucketing) -> dict:
+    """The one write of a table stage. Its row count (``rows``) and
+    ``aggs`` (aliased aggregates) ride on the write as an unnamed
+    Observation and come back by alias, so no job reads ``location``
+    back for the stage summary. ``bucketing`` holds
+    ``storage.write_bucketed``'s table/bucket_cols/n_buckets/sort_cols."""
+    seen = Observation()
+    df = df.observe(seen, F.count(F.lit(1)).alias("rows"), *aggs)
+    if bucketing:
+        storage.write_bucketed(df, path=location, **bucketing)
+    else:
+        storage.write_table(df, location)
+    return seen.get
+
+
+def _run(spark: SparkSession, args: argparse.Namespace) -> None:
     id_col = args.id_col or ("vec_id" if args.stage in ("ann", "semdedup")
                              else "doc_id")
-
-    spark = get_spark(f"apollon-{args.stage}")
     if args.stage in ("ingest", "stream-neardup", "stream-passages"):
         docs = None       # these stages interpret --input themselves
     elif args.input_format == "wav":
@@ -161,7 +193,7 @@ def main(argv: list[str] | None = None) -> int:
         docs = storage.read_table(spark, args.input)
 
     from .operators.framing import FramingParams
-    from .spectral import FeatureConfig, extract_features
+    from .spectral import FeatureConfig
     cfg = FeatureConfig(
         framing=FramingParams(args.n_perseg, args.n_overlap),
         window=args.window, fps=args.fps, causal=args.causal,
@@ -175,27 +207,35 @@ def main(argv: list[str] | None = None) -> int:
         print(json.dumps(summary))
     elif args.stage == "onsets":
         from .onsets import detect_onsets
-        storage.write_table(detect_onsets(docs, cfg), args.output)
-    elif args.stage == "hmm":
-        from .hmm import fit_hmm_docs
+        _write(detect_onsets(docs, cfg), args.output)
+    elif args.stage in ("hmm", "textstats", "scrub"):
+        # per-doc stages: one plain write, or with --resume-buckets a
+        # bucketed resumable job. Per-doc EM is the most CPU-expensive
+        # stage per byte, exactly where mid-run resume pays at scale
+        if args.stage == "hmm":
+            from .hmm import fit_hmm_docs
+            params = {"stage": "hmm", "m_states": args.m_states}
+            transform = partial(fit_hmm_docs, m_states=args.m_states)
+        else:
+            from .ml import textstats
+            params = {"stage": args.stage, "text_col": args.text_col}
+            transform = partial(textstats.text_profile
+                                if args.stage == "textstats"
+                                else textstats.scrub_text,
+                                text_col=args.text_col)
         if args.resume_buckets > 0:
-            # per-doc EM is the most CPU-expensive per byte stage —
-            # exactly where mid-run resume pays at corpus scale
             from .pipeline import run_bucketed_job
-            summary = run_bucketed_job(
-                spark, docs, args.output,
-                transform=lambda part: fit_hmm_docs(part, args.m_states),
-                params={"stage": "hmm", "m_states": args.m_states},
-                n_buckets=args.resume_buckets, job_id="hmm")
-            print(json.dumps(summary))
-            return 0
-        storage.write_table(fit_hmm_docs(docs, args.m_states), args.output)
+            print(json.dumps(run_bucketed_job(
+                spark, docs, args.output, transform=transform,
+                params=params, n_buckets=args.resume_buckets,
+                job_id=args.stage)))
+        else:
+            _write(transform(docs), args.output)
     elif args.stage == "nonlinear":
         from .nonlinear import extract_nonlinear
-        storage.write_table(extract_nonlinear(docs), args.output)
+        _write(extract_nonlinear(docs), args.output)
     elif args.stage in ("som", "position"):
         # docs here = a feature/vector table with an array<double> column
-        import numpy as np
         from .som import SomParams, assign_bmu, fit_batch_som
         vec_col = args.vec_col if args.vec_col in docs.columns else \
             ("embedding" if "embedding" in docs.columns else "lambda")
@@ -209,15 +249,13 @@ def main(argv: list[str] | None = None) -> int:
         p = SomParams(args.som_rows, args.som_cols, n_iter=args.som_epochs)
         weights, qerr = fit_batch_som(docs, vec_col, p)
         out = assign_bmu(docs, vec_col, weights)
-        storage.write_table(out.drop(vec_col), args.output)
+        _write(out.drop(vec_col), args.output)
         print(json.dumps({"qerr": qerr}))
     elif args.stage == "dedup":
         # exact dedup on the content hash: input needs (id, text) cols
         from .ml.dedup import exact_dedup
-        out = exact_dedup(docs, args.text_col, id_col)
-        storage.write_table(out, args.output)
-        written = storage.read_table(spark, args.output).count()
-        print(json.dumps({"rows_in": docs.count(), "rows_out": written}))
+        got = _write(exact_dedup(docs, args.text_col, id_col), args.output)
+        print(json.dumps({"rows_in": docs.count(), "rows_out": got["rows"]}))
     elif args.stage == "neardup":
         # MinHash-LSH near-dup pairs over the tokens column
         from .ml.dedup import minhash_dedup_pairs
@@ -225,15 +263,11 @@ def main(argv: list[str] | None = None) -> int:
             docs, n_hashes=args.n_hashes, n_bands=args.n_bands,
             shingle_k=args.shingle_k, threshold=args.threshold,
             id_col=id_col)
-        storage.write_table(pairs, args.output)
-        written = storage.read_table(spark, args.output).count()
-        print(json.dumps({"pairs": written}))
+        print(json.dumps({"pairs": _write(pairs, args.output)["rows"]}))
     elif args.stage == "cluster":
         # duplicate-cluster resolution: near-dup pairs (pre-mined via
         # --pairs, else MinHash-LSH over --input) -> connected
         # components -> one canonical doc kept per cluster
-        from pyspark.sql import functions as F
-
         from .ml.dedup import (lsh_candidate_pairs, minhash_docs,
                                resolve_dup_clusters)
         if args.pairs:
@@ -243,145 +277,92 @@ def main(argv: list[str] | None = None) -> int:
             eligible = docs.where(F.size("tokens") >= args.shingle_k)
             sigs = minhash_docs(eligible, args.n_hashes, args.shingle_k)
             pairs = lsh_candidate_pairs(sigs, n_bands=args.n_bands)
-        out = resolve_dup_clusters(docs, pairs, id_col=id_col)
-        storage.write_table(out, args.output)
-        written = storage.read_table(spark, args.output)
-        n_docs, n_keep = written.select(
-            F.count("*"), F.sum("keep")).first()
-        print(json.dumps({"docs": n_docs, "kept": int(n_keep or 0)}))
+        got = _write(resolve_dup_clusters(docs, pairs, id_col=id_col),
+                     args.output, F.sum("keep").alias("kept"))
+        print(json.dumps({"docs": got["rows"],
+                          "kept": int(got["kept"] or 0)}))
     elif args.stage == "passages":
         # exact duplicate-passage spans (fixed-k substring dedup):
         # every position whose k-token window content appears in
         # >= --min-docs distinct docs
-        from pyspark.sql import functions as F
-
         from .ml.dedup import (duplicate_passage_spans, excise_passages,
                                excise_to_fixpoint, passage_dup_stats,
                                passage_removal_spans)
-        if args.emit == "cut":
-            if args.cut_rounds > 1:
-                st: dict = {}
-                out = excise_to_fixpoint(docs, k=args.passage_k,
-                                         key=args.passage_key,
-                                         min_docs=args.min_docs,
-                                         max_rounds=args.cut_rounds,
-                                         stats=st)
-                storage.write_table(out, args.output)
-                written = storage.read_table(spark, args.output)
-                n_docs_all = written.count()
-                print(json.dumps({
-                    "docs": n_docs_all,
-                    "tokens_removed": st.get("tokens_removed", 0),
-                    "rounds": st.get("rounds", 0),
-                    "residual_span_starts": 0}))
-            else:
-                spans = passage_removal_spans(docs, k=args.passage_k,
-                                              key=args.passage_key,
-                                              min_docs=args.min_docs)
-                out = excise_passages(docs, spans)
-                storage.write_table(out, args.output)
-                written = storage.read_table(spark, args.output)
-                n_docs_all, removed = written.select(
-                    F.count("*"), F.sum("n_removed")).first()
-                # cutting creates new adjacencies across seams, so one
-                # pass is not a fixed point — report what remains so a
-                # single-pass cut is never mistaken for a converged one
-                residual = passage_removal_spans(
-                    written.drop("n_removed"), k=args.passage_k,
-                    key=args.passage_key,
-                    min_docs=args.min_docs).count()
-                print(json.dumps({"docs": n_docs_all,
-                                  "tokens_removed": int(removed or 0),
-                                  "rounds": 1,
-                                  "residual_span_starts": int(residual)}))
+        opts = dict(k=args.passage_k, key=args.passage_key,
+                    min_docs=args.min_docs)
+        if args.emit == "cut" and args.cut_rounds > 1:
+            st: dict = {}
+            out = excise_to_fixpoint(docs, max_rounds=args.cut_rounds,
+                                     stats=st, **opts)
+            print(json.dumps({
+                "docs": _write(out, args.output)["rows"],
+                "tokens_removed": st.get("tokens_removed", 0),
+                "rounds": st.get("rounds", 0),
+                "residual_span_starts": 0}))
+        elif args.emit == "cut":
+            out = excise_passages(docs, passage_removal_spans(docs, **opts))
+            got = _write(out, args.output,
+                         F.sum("n_removed").alias("removed"))
+            # cutting creates new adjacencies across seams, so one
+            # pass is not a fixed point — report what remains so a
+            # single-pass cut is never mistaken for a converged one.
+            # This probe must scan the cut corpus: the one read-back
+            residual = passage_removal_spans(
+                storage.read_table(spark, args.output).drop("n_removed"),
+                **opts).count()
+            print(json.dumps({"docs": got["rows"],
+                              "tokens_removed": int(got["removed"] or 0),
+                              "rounds": 1,
+                              "residual_span_starts": int(residual)}))
         elif args.emit == "stats":
-            out = passage_dup_stats(docs, k=args.passage_k,
-                                    key=args.passage_key,
-                                    min_docs=args.min_docs)
-            storage.write_table(out, args.output)
-            written = storage.read_table(spark, args.output)
-            n_docs_all, n_hit, frac = written.select(
-                F.count("*"),
-                F.sum((F.col("n_dup_tokens") > 0).cast("int")),
-                F.round(F.avg("dup_frac"), 6)).first()
-            print(json.dumps({"docs": n_docs_all,
-                              "docs_with_dups": int(n_hit or 0),
-                              "mean_dup_frac": float(frac or 0.0)}))
+            got = _write(
+                passage_dup_stats(docs, **opts), args.output,
+                F.sum((F.col("n_dup_tokens") > 0).cast("int")).alias("hit"),
+                F.round(F.avg("dup_frac"), 6).alias("frac"))
+            print(json.dumps({"docs": got["rows"],
+                              "docs_with_dups": int(got["hit"] or 0),
+                              "mean_dup_frac": float(got["frac"] or 0.0)}))
         else:
-            out = duplicate_passage_spans(docs, k=args.passage_k,
-                                          key=args.passage_key,
-                                          min_docs=args.min_docs)
-            storage.write_table(out, args.output)
-            written = storage.read_table(spark, args.output)
-            n_spans, n_docs_hit = written.select(
-                F.count("*"), F.countDistinct("doc_id")).first()
+            n_spans = _write(duplicate_passage_spans(docs, **opts),
+                             args.output)["rows"]
+            # an observed metric cannot be DISTINCT: the other read-back
+            n_docs_hit = storage.read_table(spark, args.output).select(
+                F.countDistinct("doc_id")).first()[0]
             print(json.dumps({"span_starts": n_spans,
                               "docs_hit": int(n_docs_hit or 0)}))
-    elif args.stage == "filter":
-        # Gopher-rule quality verdicts (Rae et al. 2021 §A1.1): input
-        # = tokenized docs table with a text column; output = per-doc
-        # per-rule flags + combined keep
-        from pyspark.sql import functions as F
-
-        from .ml.curation import quality_filter
-        out = quality_filter(docs, text_col=args.text_col)
-        storage.write_table(out, args.output)
-        written = storage.read_table(spark, args.output)
-        n, kept = written.select(F.count("*"), F.sum("keep")).first()
-        kept = int(kept or 0)
-        print(json.dumps({"docs": n, "kept": kept, "dropped": n - kept}))
-    elif args.stage == "semdedup":
-        # SemDeDup (arXiv:2303.09540): k-means-partition the embedding
+    elif args.stage in ("filter", "semdedup"):
+        # filter: Gopher-rule quality verdicts (Rae et al. 2021 §A1.1)
+        # over a tokenized docs table with a text column; output =
+        # per-doc per-rule flags + combined keep.
+        # semdedup (arXiv:2303.09540): k-means-partition the embedding
         # space, mine near-dups within clusters only, keep the least-
         # prototypical member per duplicate group. Input = vector table
         # (--id-col/--vec-col, defaults vec_id/embedding).
-        from pyspark.sql import functions as F
-
-        from .ml.semdedup import semantic_dedup
-        out = semantic_dedup(docs, args.threshold,
-                             n_clusters=args.n_clusters,
-                             id_col=id_col, vec_col=args.vec_col)
-        storage.write_table(out, args.output)
-        written = storage.read_table(spark, args.output)
-        n, kept = written.select(F.count("*"), F.sum("keep")).first()
-        kept = int(kept or 0)
-        print(json.dumps({"vectors": n, "kept": kept,
-                          "dropped": n - kept}))
+        if args.stage == "filter":
+            from .ml.curation import quality_filter
+            out = quality_filter(docs, text_col=args.text_col)
+            unit = "docs"
+        else:
+            from .ml.semdedup import semantic_dedup
+            out = semantic_dedup(docs, args.threshold,
+                                 n_clusters=args.n_clusters,
+                                 id_col=id_col, vec_col=args.vec_col)
+            unit = "vectors"
+        got = _write(out, args.output, F.sum("keep").alias("kept"))
+        n, kept = got["rows"], int(got["kept"] or 0)
+        print(json.dumps({unit: n, "kept": kept, "dropped": n - kept}))
     elif args.stage == "ann":
         # LSH top-k: input = vector table (--id-col, --vec-col; defaults
         # vec_id/embedding); queries = the first --n-queries vectors
         import numpy as np
-        from pyspark.sql import functions as F
         from .ml.simsearch import lsh_ann_topk
         qrows = (docs.orderBy(id_col).limit(args.n_queries)
                  .select(id_col, args.vec_col).collect())
         queries = np.array([r[args.vec_col] for r in qrows], "float64")
         q_ids = np.array([r[id_col] for r in qrows], "int64")
-        out = lsh_ann_topk(docs, queries, q_ids, k=args.topk,
-                           id_col=id_col, vec_col=args.vec_col)
-        storage.write_table(out, args.output)
-    elif args.stage == "textstats":
-        from .ml.textstats import text_profile
-        if args.resume_buckets > 0:
-            from .pipeline import run_bucketed_job
-            print(json.dumps(run_bucketed_job(
-                spark, docs, args.output,
-                transform=lambda part: text_profile(part, args.text_col),
-                params={"stage": "textstats", "text_col": args.text_col},
-                n_buckets=args.resume_buckets, job_id="textstats")))
-            return 0
-        storage.write_table(text_profile(docs, args.text_col), args.output)
-    elif args.stage == "scrub":
-        from .ml.textstats import scrub_text
-        if args.resume_buckets > 0:
-            from .pipeline import run_bucketed_job
-            print(json.dumps(run_bucketed_job(
-                spark, docs, args.output,
-                transform=lambda part: scrub_text(part, args.text_col),
-                params={"stage": "scrub", "text_col": args.text_col},
-                n_buckets=args.resume_buckets, job_id="scrub")))
-            return 0
-        storage.write_table(scrub_text(docs, args.text_col), args.output)
+        _write(lsh_ann_topk(docs, queries, q_ids, k=args.topk,
+                            id_col=id_col, vec_col=args.vec_col),
+               args.output)
     elif args.stage == "ingest":
         # raw documents table -> canonical tokenized docs table, in
         # the SCALE.md layout: bucketed by doc_id (co-located joins +
@@ -394,15 +375,11 @@ def main(argv: list[str] | None = None) -> int:
                 spark, _os.path.dirname(args.input) or ".")
         else:
             out = storage.read_table(spark, args.input)
-        if args.ingest_buckets > 0:
-            storage.write_bucketed(out, args.table_name, ["doc_id"],
-                                   args.ingest_buckets,
-                                   sort_cols=["n_tok"], path=args.output)
-            n = spark.table(args.table_name).count()
-        else:
-            storage.write_table(out, args.output)
-            n = storage.read_table(spark, args.output).count()
-        print(json.dumps({"rows": n}))
+        bucketing = (dict(table=args.table_name, bucket_cols=["doc_id"],
+                          n_buckets=args.ingest_buckets, sort_cols=["n_tok"])
+                     if args.ingest_buckets > 0 else {})
+        print(json.dumps({"rows": _write(out, args.output,
+                                         **bucketing)["rows"]}))
     elif args.stage == "stream-neardup":
         from .streaming import stream_minhash_neardup
         if not (args.checkpoint and args.store):
@@ -439,21 +416,16 @@ def main(argv: list[str] | None = None) -> int:
         # --shuffle-salt packs in a deterministic md5-shuffled doc
         # order instead of ingest order (shuffle-key-prefixed ids;
         # ml/curation.shuffle_corpus)
-        from pyspark.sql import functions as F
-
         from .operators.packing import pack_sequences
         if args.shuffle_salt:
             from .ml.curation import shuffle_key
             docs = docs.withColumn(
                 "doc_id", F.concat(shuffle_key(args.shuffle_salt),
                                    F.lit(":"), F.col("doc_id")))
-        out = pack_sequences(docs, args.ctx_len)
-        storage.write_table(out, args.output)
-        stats = storage.read_table(spark, args.output) \
-            .selectExpr("count(*) AS n_seqs",
-                        "cast(sum(n_tok) as bigint) AS n_tokens").first()
-        print(json.dumps({"n_seqs": stats["n_seqs"],
-                          "n_tokens": stats["n_tokens"],
+        got = _write(pack_sequences(docs, args.ctx_len), args.output,
+                     F.sum("n_tok").cast("bigint").alias("n_tokens"))
+        print(json.dumps({"n_seqs": got["rows"],
+                          "n_tokens": int(got["n_tokens"] or 0),
                           "ctx_len": args.ctx_len}))
     elif args.stage == "sample":
         from .ml.curation import (mixture_sample, sample_rate,
@@ -472,7 +444,6 @@ def main(argv: list[str] | None = None) -> int:
                 from .ml.curation import budget_mixture_weights
                 weights = budget_mixture_weights(
                     docs, weights, args.budget_tokens, by=args.stratify_by)
-            from pyspark.sql import functions as F
             copies = mixture_sample(docs, weights, by=args.stratify_by)
             # resampled copies get UNIQUE ids (doc_id#copy, original
             # kept in orig_doc_id): every downstream stage joins or
@@ -489,57 +460,47 @@ def main(argv: list[str] | None = None) -> int:
             out = docs.join(keep.select("doc_id"), "doc_id", "left_semi")
         else:
             out = sample_rate(docs, args.rate_hex)
-        storage.write_table(out, args.output)
-        written = storage.read_table(spark, args.output).count()
-        print(json.dumps({"rows_in": docs.count(), "rows_out": written}))
+        got = _write(out, args.output)
+        print(json.dumps({"rows_in": docs.count(), "rows_out": got["rows"]}))
     elif args.stage == "contaminate":
-        from pyspark.sql import functions as F
-
         from .ml.curation import benchmark_split, contamination_check
         if args.benchmark:
             bench = storage.read_table(spark, args.benchmark)
             train = docs
         else:
             train, bench = benchmark_split(docs)
-        out = contamination_check(train, bench, k=args.shingle_k)
-        storage.write_table(out, args.output)
-        written = storage.read_table(spark, args.output)
-        n_scored, n_hit = written.select(
-            F.count("*"), F.count(F.when(F.col("hit_frac") > 0, 1))).first()
-        print(json.dumps({"docs_scored": n_scored,
-                          "docs_contaminated": n_hit}))
+        got = _write(contamination_check(train, bench, k=args.shingle_k),
+                     args.output,
+                     F.count(F.when(F.col("hit_frac") > 0, 1)).alias("hit"))
+        print(json.dumps({"docs_scored": got["rows"],
+                          "docs_contaminated": got["hit"]}))
     elif args.stage == "lmscore":
         # CCNet-style bigram-LM quality signal: score docs under a
         # model counted on --benchmark (a trusted reference table); a
         # deterministic benchmark_split of the input when absent
-        from pyspark.sql import functions as F
-
         from .ml.curation import benchmark_split, ngram_lm_score
         if args.benchmark:
             ref = storage.read_table(spark, args.benchmark)
             scored = docs
         else:
             scored, ref = benchmark_split(docs)
-        out = ngram_lm_score(scored, ref)
-        storage.write_table(out, args.output)
-        written = storage.read_table(spark, args.output)
         # bigram-weighted corpus mean: the 0.0 zero-fill of bigram-less
         # docs is "unscored", not "perfect" — a plain avg would pull
         # the corpus score toward 0 on short-doc-heavy corpora
-        n, n_scored, tot_lp, tot_bg = written.select(
-            F.count("*"),
-            F.count(F.when(F.col("n_bigrams") > 0, 1)),
-            F.sum(F.col("mean_logp") * F.col("n_bigrams")),
-            F.sum("n_bigrams")).first()
-        mean_lp = float(tot_lp or 0.0) / max(int(tot_bg or 0), 1)
-        print(json.dumps({"docs": n, "docs_scored": int(n_scored),
+        got = _write(
+            ngram_lm_score(scored, ref), args.output,
+            F.count(F.when(F.col("n_bigrams") > 0, 1)).alias("scored"),
+            F.sum(F.col("mean_logp") * F.col("n_bigrams")).alias("lp"),
+            F.sum("n_bigrams").alias("bigrams"))
+        mean_lp = float(got["lp"] or 0.0) / max(int(got["bigrams"] or 0), 1)
+        print(json.dumps({"docs": got["rows"],
+                          "docs_scored": int(got["scored"]),
                           "corpus_mean_logp": round(mean_lp, 6)}))
     elif args.stage == "export":
         if args.export_format == "csv":
             storage.write_csv(docs, args.output)
         else:
             storage.write_json(docs, args.output)
-    return 0
 
 
 if __name__ == "__main__":

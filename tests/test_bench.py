@@ -66,6 +66,34 @@ def test_bench_diff_compares_matched_gates_only(capsys, tmp_path):
         in out
 
 
+def test_bench_diff_marks_deltas_inside_the_iqr_as_noise(capsys, tmp_path):
+    """A comparable gate whose median moved less than either record's
+    iqr prints ``noise``; one that moved further prints its share."""
+    def rec(gates):
+        return {"cpus": 4, "sf": 0.001,
+                "queries": {name: {"median": med, "iqr": iqr,
+                                   "fingerprint": name}
+                            for name, (med, iqr) in gates.items()}}
+
+    # inside: |1.10 - 1.00| < b's iqr 0.15; outside: |3.00 - 2.00| > 0.2
+    a = rec({"inside": (1.00, 0.02), "outside": (2.00, 0.20)})
+    b = rec({"inside": (1.10, 0.15), "outside": (3.00, 0.10)})
+    rows, sub_a, sub_b = bench_diff.diff(a, b)
+    assert {r[0]: r[3] for r in rows} == {"inside": "noise", "outside": ""}
+    assert (sub_a, sub_b) == (3.0, 4.1)
+
+    pa, pb = tmp_path / "a.json", tmp_path / "b.json"
+    pa.write_text(json.dumps(a))
+    pb.write_text(json.dumps(b))
+    bench_diff.main(str(pa), str(pb))
+    lines = {ln.split()[0]: ln for ln in capsys.readouterr().out.splitlines()}
+    assert lines["inside"].endswith("  noise")
+    assert lines["outside"].endswith("  +50.0%")
+    assert lines["subtotal"] == ("subtotal over 2 comparable gates "
+                                 "(median s): 3.000 -> 4.100; 1 of them "
+                                 "noise")
+
+
 def test_timed_set_is_the_registry(spark, sf_dir, monkeypatch):
     """bench times exactly the registered gates, under their names."""
     names = list(entrymod.queries())
