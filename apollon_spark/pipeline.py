@@ -7,14 +7,19 @@ semantics survive cluster-size changes). Buckets whose
 ``_done/bucket=K`` marker exists (under the same params hash) are
 skipped instantly; every pending bucket is one unit of work:
 
-  1. runs the stage's transform on its doc slice, counting the rows
-     it reads with a ``pyspark.sql.Observation`` (no count job),
-  2. writes output parquet under ``out/<job_id>/bucket=K/``,
-  3. reads the parquet back for rows out and an output checksum,
-  4. emits a lineage+metrics record (rows in/out, checksum, wall
+  1. runs the stage's transform on its doc slice,
+  2. writes output parquet under ``out/<job_id>/bucket=K/`` in one
+     Spark job; two ``pyspark.sql.Observation``s on that write observe
+     the rows it reads, the rows it writes and their checksum (no
+     count job, no read-back of the parquet),
+  3. emits a lineage+metrics record (rows in/out, checksum, wall
      seconds, params hash) under ``out/_lineage/``,
-  5. commits the marker last — a crash before the marker reruns the
+  4. commits the marker last — a crash before the marker reruns the
      bucket; the rerun overwrites the same paths (idempotent).
+
+The observed rows out and checksum are the persisted ones: the write
+is the action that fills them, and Spark merges a task's observed
+metrics once, from its successful attempt.
 
 Pending buckets are in flight together, on up to
 ``defaultParallelism`` driver threads. Spark's FIFO scheduler still
@@ -86,7 +91,7 @@ def run_bucketed_job(spark: SparkSession, docs: DataFrame, out_dir: str,
     a different bucket count against old markers would duplicate every
     doc whose crc32 slice moved — the markers must invalidate.
     ``transform`` must stay lazy (run no action on its input): the
-    write is the action that fulfils the bucket's rows-in Observation.
+    write is the action that fulfils the bucket's Observations.
     """
     phash = _params_hash({**params, "n_buckets": n_buckets})
     checksum_col = checksum_col or _generic_checksum_col
@@ -120,22 +125,22 @@ def run_bucketed_job(spark: SparkSession, docs: DataFrame, out_dir: str,
     def run_bucket(k: int) -> int:
         t0 = time.time()
         out_path = os.path.join(out_dir, job_id, f"bucket={k}")
-        # one Observation per bucket run (each fulfils once): the
-        # write job counts the rows read, so no separate count job
-        seen = Observation()
+        # fresh Observations per bucket run (each fulfils once): the
+        # write job counts the rows it reads and sums what it writes,
+        # so no count job and no read-back
+        seen, wrote = Observation(), Observation()
         part = (docs.where(F.col("_bucket") == k).drop("_bucket")
                 .observe(seen, F.count(F.lit(1)).alias("rows_in")))
-        transform(part).write.mode("overwrite").parquet(out_path)
-        # rows out and checksum come from what is on disk
-        written = spark.read.parquet(out_path)
-        agg = written.select(
-            F.count("*").alias("n"),
-            F.sum(checksum_col(written)).alias("cs")).first()
-        rows_out, checksum = int(agg["n"]), float(agg["cs"] or 0.0)
+        out = transform(part)
+        out.observe(wrote, F.count(F.lit(1)).alias("rows_out"),
+                    F.sum(checksum_col(out)).alias("checksum")) \
+            .write.mode("overwrite").parquet(out_path)
+        rows_out = int(wrote.get["rows_out"])
         record = {
             "job_id": job_id, "bucket": k, "params_hash": phash,
             "rows_in": int(seen.get["rows_in"]), "rows_out": rows_out,
-            "checksum": checksum, "wall_sec": round(time.time() - t0, 3),
+            "checksum": float(wrote.get["checksum"] or 0.0),
+            "wall_sec": round(time.time() - t0, 3),
             "out_path": out_path,
         }
         with open(os.path.join(lineage_dir, f"bucket_{k}.json"), "w") as fh:

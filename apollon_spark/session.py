@@ -9,6 +9,7 @@ from __future__ import annotations
 import os
 import pathlib
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 # Repo root — shipped via --py-files on a real cluster; in local mode the
@@ -22,7 +23,12 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
-    """Build (or get) a SparkSession.
+    """Build a SparkSession, or return the running one as it is.
+
+    A running session keeps the confs it was built with (the arguments
+    below apply only when this call starts the session): re-applying
+    the defaults to it would silently reset what its owner set, e.g. a
+    test session's shuffle partitions, on every ``cli.main`` call.
 
     Args:
         app_name: Spark application name.
@@ -33,6 +39,8 @@ def get_spark(
             coalesces small partitions at runtime either way.
         extra_conf: additional config overrides.
     """
+    if SparkContext._active_spark_context is not None:
+        return SparkSession.builder.getOrCreate()
     if cpus is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     n_cores = os.cpu_count() or 8 if cpus in ("*", None) else int(cpus)
@@ -71,6 +79,14 @@ def get_spark(
     # master URL) instead of in-process local mode. cpus then means the
     # TOTAL executor cores the job should assume for sizing.
     master = os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
+    # the driver heap defaults to 48g, capped at half the machine's RAM:
+    # with a cap above physical memory G1 commits heap the box does not
+    # have, and the kernel kills the JVM (a 16 GB box's test session
+    # reached 14.7 GB RSS)
+    ram_gb = (os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+              // 1024 ** 3)
+    driver_mem = os.environ.get("SPARK_DRIVER_MEM",
+                                f"{max(1, min(48, ram_gb // 2))}g")
     builder = (
         SparkSession.builder.master(master)
         .appName(app_name)
@@ -83,7 +99,7 @@ def get_spark(
         # big Arrow batches amortize the Python<->JVM boundary for the
         # pandas-UDF feature kernels (each batch = many whole docs)
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "256")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", driver_mem)
         .config("spark.ui.enabled", "false")
         # parquet scans: allow splitting large files across tasks
         .config("spark.sql.files.maxPartitionBytes", "134217728")

@@ -252,9 +252,12 @@ def fit_batch_som(vectors: DataFrame, vec_col: str, p: SomParams,
                              f"({grid.n_units}, {d})")
         weights = np.asarray(w0, dtype="float64").copy()
     else:
+        # only the rnd and pca inits read data: stm and hist draw from
+        # the seed alone, so they run no sample job
         sample = np.array(
             [r[0] for r in
-             vectors.select(vec_col).limit(sample_init).collect()])
+             vectors.select(vec_col).limit(sample_init).collect()]) \
+            if p.init in ("rnd", "pca") else None
         weights = init_weights(p.init, (p.n_rows, p.n_cols, d), sample,
                                p.seed)
     kern_fn = KERNELS[p.kernel]

@@ -86,3 +86,14 @@ def write_bucketed(df: DataFrame, table: str, bucket_cols: list[str],
     if path:
         writer = writer.option("path", path)
     writer.saveAsTable(table)
+    if path and os.path.isdir(path) and not any(
+            name.endswith(".parquet") for name in os.listdir(path)):
+        # a bucketed write of 0 rows leaves no data file, and a path
+        # with none is unreadable (no schema to infer): write one empty
+        # file under Spark's bucket-0 file name, so that the path reads
+        # as an empty table and the catalog table still scans bucketed
+        import pyarrow.parquet as pq
+        from pyspark.sql.pandas.types import to_arrow_schema
+        pq.write_table(to_arrow_schema(df.schema).empty_table(),
+                       os.path.join(path, "part-00000-empty_00000.c000"
+                                          ".snappy.parquet"))

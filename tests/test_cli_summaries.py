@@ -165,9 +165,6 @@ def expected(spark, table, case, run):
                     os.path.join(out, stage)).count(),
                 "params_hash": _params_hash(
                     {"stage": stage, **params, "n_buckets": 2})}
-    if case == "ingest_buckets":
-        # an empty bucketed write leaves no file at --output
-        return {"rows": spark.table(_arg(argv, "--table-name")).count()}
     pdf = spark.read.parquet(out).toPandas()
     n, rows_in = len(pdf), len(TABLES[table])
 
@@ -263,3 +260,51 @@ def test_no_stage_leaves_an_rdd_persisted(runs):
     leaked = {key: run["leaked"] for key, run in runs.items()
               if run["leaked"]}
     assert not leaked
+
+
+def test_empty_bucketed_ingest_is_a_readable_table(spark, runs, tmp_path):
+    """`ingest --ingest-buckets` of an empty table leaves a docs table
+    at --output that reads with the input's columns, and a filter run
+    on it prints zero counts."""
+    run = runs["empty", "ingest_buckets"]
+    got = storage.read_table(spark, run["out"])
+    assert got.count() == 0
+    assert got.columns == storage.read_table(spark, run["inp"]).columns
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        assert cli.main(["--stage", "filter", "--input", run["out"],
+                         "--output", str(tmp_path / "filtered")]) == 0
+    assert json.loads(buf.getvalue().strip().splitlines()[-1]) == {
+        "docs": 0, "kept": 0, "dropped": 0}
+
+
+def test_cli_leaves_the_session_confs(spark, tmp_path):
+    """cli.main runs in the caller's live session and leaves the
+    session's runtime confs as the caller set them."""
+    confs = {"spark.sql.shuffle.partitions": "7",
+             "spark.sql.execution.arrow.maxRecordsPerBatch": "48"}
+    before = {key: spark.conf.get(key) for key in confs}
+    inp = str(tmp_path / "in")
+    storage.write_table(spark.createDataFrame(TABLES["one"], SCHEMA), inp)
+    try:
+        for key, val in confs.items():
+            spark.conf.set(key, val)
+        with contextlib.redirect_stdout(io.StringIO()):
+            assert cli.main(["--stage", "ingest", "--input", inp,
+                             "--output", str(tmp_path / "out")]) == 0
+        assert {key: spark.conf.get(key) for key in confs} == confs
+    finally:
+        for key, val in before.items():
+            spark.conf.set(key, val)
+
+
+def test_default_driver_heap_fits_the_machine(spark):
+    """Without SPARK_DRIVER_MEM, get_spark sizes the driver heap to at
+    most half the machine's RAM (and at most 48g), so the JVM cannot
+    commit more heap than the box has."""
+    if "SPARK_DRIVER_MEM" in os.environ:
+        pytest.skip("SPARK_DRIVER_MEM sets the heap")
+    mem = spark.sparkContext.getConf().get("spark.driver.memory")
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    assert mem.endswith("g")
+    assert 1 <= int(mem[:-1]) <= min(48, max(1, ram // 1024 ** 3 // 2))

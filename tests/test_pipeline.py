@@ -4,10 +4,27 @@ import os
 import numpy as np
 import pytest
 
+from pyspark.sql import functions as F
+
 from apollon_spark.datagen import synth_docs
 from apollon_spark.operators.framing import FramingParams
-from apollon_spark.pipeline import read_lineage, run_feature_job
+from apollon_spark.pipeline import (_feature_checksum_col,
+                                    _generic_checksum_col, read_lineage,
+                                    run_feature_job)
 from apollon_spark.spectral import FeatureConfig
+
+
+def assert_lineage_matches_disk(spark, out, checksum_col):
+    """Every lineage record's rows_out and checksum (observed on the
+    bucket's write) equal a read of the parquet at its out_path; an
+    empty bucket records 0 and 0.0."""
+    for r in read_lineage(out):
+        written = spark.read.parquet(r["out_path"])
+        n, cs = written.select(F.count("*"),
+                               F.sum(checksum_col(written))).first()
+        assert (r["rows_out"], r["checksum"]) == (n, float(cs or 0.0)), r
+        if r["rows_in"] == 0:
+            assert (r["rows_out"], r["checksum"]) == (0, 0.0), r
 
 
 def test_run_and_resume(spark, tmp_path):
@@ -32,6 +49,8 @@ def _run_and_resume(spark, out, n_buckets):
     assert all(r["rows_out"] == 0 for r in lineage if r["rows_in"] == 0)
     assert all(r["wall_sec"] > 0 for r in lineage)
     assert all(r["params_hash"] == s1["params_hash"] for r in lineage)
+    assert_lineage_matches_disk(spark, out,
+                                lambda _df: _feature_checksum_col())
 
     feats = spark.read.parquet(os.path.join(out, "features"))
     n_rows = feats.count()
@@ -61,6 +80,69 @@ def _run_and_resume(spark, out, n_buckets):
                for r in read_lineage(out))
 
 
+DOCS_SCHEMA = "doc_id string, tokens array<int>, n_tok int, source string"
+N_PERSEG = 16
+
+
+def _degenerate_tables():
+    rng = np.random.default_rng(8)
+
+    def doc(doc_id, n_tok):
+        return (doc_id, [int(t) for t in rng.poisson(6, n_tok)], n_tok,
+                "web")
+
+    same = doc("s", 40)[1]
+    return {
+        "empty": [],
+        "one": [doc("solo", 40)],
+        "short": [doc("z0", 0), doc("z1", 1), doc("z15", N_PERSEG - 1)],
+        "same5": [(f"s{i}", same, len(same), "web") for i in range(5)],
+    }
+
+
+def test_bucketed_stages_degenerate_corpora(spark, tmp_path):
+    """run_feature_job and `--stage hmm --resume-buckets 2` on an empty
+    docs table, one doc, docs with n_tok in {0, 1, n_perseg - 1}, and
+    five docs with identical tokens: each summary equals the written
+    output, each lineage record equals a read of its bucket (an empty
+    bucket records 0 rows and checksum 0.0), and every marker is
+    written."""
+    import contextlib
+    import io
+    import json
+
+    from apollon_spark import cli, storage
+    cfg = FeatureConfig(framing=FramingParams(N_PERSEG, N_PERSEG // 2))
+    hmm_rows = {}
+    for name, rows in _degenerate_tables().items():
+        inp = str(tmp_path / name / "in")
+        storage.write_table(spark.createDataFrame(rows, DOCS_SCHEMA), inp)
+        feat_out = str(tmp_path / name / "features")
+        s = run_feature_job(spark, storage.read_table(spark, inp), feat_out,
+                            cfg, n_buckets=2)
+        hmm_out = str(tmp_path / name / "hmm")
+        buf = io.StringIO()
+        with contextlib.redirect_stdout(buf):
+            assert cli.main(["--stage", "hmm", "--input", inp, "--output",
+                             hmm_out, "--resume-buckets", "2"]) == 0
+        printed = json.loads(buf.getvalue().strip().splitlines()[-1])
+        for out, job_id, summary, checksum_col in (
+                (feat_out, "features", s, lambda _df: _feature_checksum_col()),
+                (hmm_out, "hmm", printed, _generic_checksum_col)):
+            written = spark.read.parquet(os.path.join(out, job_id))
+            assert summary["rows_out"] == written.count(), (name, job_id)
+            assert (summary["buckets_done"], summary["buckets_skipped"]) \
+                == (2, 0), (name, job_id)
+            assert sorted(os.listdir(os.path.join(out, "_done"))) == [
+                "bucket=0", "bucket=1"], (name, job_id)
+            lineage = read_lineage(out)
+            assert sum(r["rows_in"] for r in lineage) == len(rows)
+            assert_lineage_matches_disk(spark, out, checksum_col)
+        hmm_rows[name] = printed["rows_out"]
+    # one fit per doc
+    assert hmm_rows == {"empty": 0, "one": 1, "short": 3, "same5": 5}
+
+
 def _text_docs(spark, ids):
     import pandas as pd
     return spark.createDataFrame(pd.DataFrame({
@@ -70,8 +152,11 @@ def _text_docs(spark, ids):
 
 
 def test_bucketed_job_runs_no_count_job(spark, tmp_path, monkeypatch):
-    """rows_in comes from an Observation on the bucket's write job, not
-    from a count() action per bucket."""
+    """Each pending bucket is one Spark job, its write: rows_in, rows_out
+    and the checksum come from Observations on that write, not from a
+    count() action or a read-back of the bucket's parquet."""
+    from pyspark.sql import DataFrameReader
+
     from apollon_spark.ml.textstats import text_profile
     from apollon_spark.pipeline import run_bucketed_job
     docs = _text_docs(spark, [f"d{i}" for i in range(12)])
@@ -79,10 +164,21 @@ def test_bucketed_job_runs_no_count_job(spark, tmp_path, monkeypatch):
     def no_count(self):
         raise AssertionError("run_bucketed_job ran a count() job")
 
+    def no_read(self, *paths, **options):
+        raise AssertionError(f"run_bucketed_job read {paths} back")
+
     monkeypatch.setattr(type(docs), "count", no_count)
-    s = run_bucketed_job(spark, docs, str(tmp_path / "tp"), text_profile,
-                         {"stage": "textstats"}, n_buckets=3,
-                         job_id="textstats")
+    monkeypatch.setattr(DataFrameReader, "parquet", no_read)
+    sc, group = spark.sparkContext, "test_bucketed_job_one_job_per_bucket"
+    sc.setJobGroup(group, group)
+    try:
+        s = run_bucketed_job(spark, docs, str(tmp_path / "tp"),
+                             text_profile, {"stage": "textstats"},
+                             n_buckets=3, job_id="textstats")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 3
     assert s["buckets_done"] == 3 and s["rows_out"] == 12
     assert sum(r["rows_in"] for r in read_lineage(str(tmp_path / "tp"))) \
         == 12
@@ -178,6 +274,7 @@ def test_generic_bucketed_job_resume(spark, tmp_path):
     lineage = read_lineage(out)
     assert len(lineage) == 3
     assert sum(r["rows_in"] for r in lineage) == 12
+    assert_lineage_matches_disk(spark, out, _generic_checksum_col)
     # resume: nothing reruns
     s2 = run_bucketed_job(spark, docs, out, tf, params,
                           n_buckets=3, job_id="textstats")

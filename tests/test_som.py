@@ -196,11 +196,13 @@ def test_assign_bmu_round_scale_is_half_up(spark):
     assert got["bmu_dist"] == want[1]
 
 
-def test_batch_som_partitioning_and_repeat_determinism(spark):
+def test_batch_som_partitioning_and_repeat_determinism(spark, monkeypatch):
     """fit_batch_som sums one partial per partition on the driver, in
     partition order: a different partitioning changes only the float
     summation order (weights agree to 1e-12), and two fits on one
-    partitioning are bit-identical."""
+    partitioning are bit-identical. The stm init reads no data: its
+    fit runs no limit() sample job and equals the fit pinned to the
+    seed's stm weights."""
     import pandas as pd
     data = _clusters(400)
     df = spark.createDataFrame(
@@ -219,3 +221,26 @@ def test_batch_som_partitioning_and_repeat_determinism(spark):
     assert w5.tobytes() == w5b.tobytes() and q5 == q5b
     one.unpersist()
     five.unpersist()
+
+    # rows of 2x2 stochastic matrices, the stm init's domain
+    rng = np.random.default_rng(3)
+    stoch = np.concatenate([rng.dirichlet(np.ones(2), 200),
+                            rng.dirichlet(np.ones(2), 200)], axis=1)
+    sdf = spark.createDataFrame(
+        pd.DataFrame({"vec_id": range(200), "vec": list(stoch)}))
+    ps = som.SomParams(3, 3, n_iter=3, init="stm", seed=10)
+
+    limits, real_limit = [], type(sdf).limit
+
+    def spy(self, num):
+        limits.append(num)
+        return real_limit(self, num)
+
+    with monkeypatch.context() as m:
+        m.setattr(type(sdf), "limit", spy)
+        ws, qs = som.fit_batch_som(sdf, "vec", ps, sample_init=50)
+    # first()'s one-row dimension probe is the only limit
+    assert limits == [1]
+    wp, qp = som.fit_batch_som(
+        sdf, "vec", ps, w0=som.init_weights("stm", (3, 3, 4), seed=10))
+    assert ws.tobytes() == wp.tobytes() and qs == qp
