@@ -15,11 +15,11 @@ hmm/utilities.py:448-478) so results are comparable across runs.
 from __future__ import annotations
 
 import zlib
-from typing import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from .session import map_docs
 
 
 # ---------------------------------------------------------------------------
@@ -120,6 +120,31 @@ def _log_poisson_pmf(x: np.ndarray, lams: np.ndarray) -> np.ndarray:
             - lams[None, :] - log_fact[x][:, None])
 
 
+def _forward_backward(b: np.ndarray, gamma: np.ndarray,
+                      delta: np.ndarray) -> tuple[np.ndarray, ...]:
+    """Scaled forward-backward over (T, m) emission likelihoods ``b``:
+    (alpha, c, beta, post) — the scaled forward variables, the
+    per-step scale factors, the scaled backward variables and the
+    smoothed posteriors (reference hmm/poisson.py:78-98)."""
+    T, m = b.shape
+    alpha = np.empty((T, m))
+    c = np.empty(T)
+    phi = delta * b[0]
+    c[0] = phi.sum()
+    alpha[0] = phi / c[0]
+    for t in range(1, T):
+        phi = (alpha[t - 1] @ gamma) * b[t]
+        c[t] = phi.sum()
+        alpha[t] = phi / c[t]
+    beta = np.empty((T, m))
+    beta[-1] = 1.0
+    for t in range(T - 2, -1, -1):
+        beta[t] = (gamma @ (b[t + 1] * beta[t + 1])) / c[t + 1]
+    post = alpha * beta
+    post /= post.sum(axis=1, keepdims=True)
+    return alpha, c, beta, post
+
+
 def poisson_em(x: np.ndarray, m: int, lam: np.ndarray, gamma: np.ndarray,
                delta: np.ndarray, max_iter: int = 1000,
                tol: float = 1e-5) -> dict:
@@ -140,27 +165,8 @@ def poisson_em(x: np.ndarray, m: int, lam: np.ndarray, gamma: np.ndarray,
         logb = _log_poisson_pmf(x, lam)
         bmax = logb.max(axis=1, keepdims=True)
         b = np.exp(logb - bmax)                       # (T, m), row max = 1
-
-        # scaled forward
-        alpha = np.empty((T, m))
-        c = np.empty(T)
-        phi = delta * b[0]
-        c[0] = phi.sum()
-        alpha[0] = phi / c[0]
-        for t in range(1, T):
-            phi = (alpha[t - 1] @ gamma) * b[t]
-            c[t] = phi.sum()
-            alpha[t] = phi / c[t]
+        alpha, c, beta, post = _forward_backward(b, gamma, delta)
         ll = np.log(c).sum() + bmax.sum()
-
-        # scaled backward
-        beta = np.empty((T, m))
-        beta[-1] = 1.0
-        for t in range(T - 2, -1, -1):
-            beta[t] = (gamma @ (b[t + 1] * beta[t + 1])) / c[t + 1]
-
-        post = alpha * beta                            # (T, m) posteriors
-        post /= post.sum(axis=1, keepdims=True)
 
         # xi sums for the tpm update
         xi = gamma * (alpha[:-1].T @ ((b[1:] * beta[1:]) / c[1:, None]))
@@ -223,46 +229,34 @@ def fit_hmm_docs(docs: DataFrame, m_states: int = 3,
                  init_delta_method: str = "stationary",
                  fill_diag: float = 0.8, max_iter: int = 1000,
                  tol: float = 1e-5, max_obs: int | None = None) -> DataFrame:
-    """One fitted Poisson HMM per doc — shuffle-free mapInPandas.
+    """One fitted Poisson HMM per doc: one ``session.map_docs`` stage.
 
     ``max_obs``: optionally fit on the first N observations (bounds
     per-doc EM cost on whales; the regime structure is stationary).
+    A doc whose fit raises gets a row of nulls with ``success`` false.
+    EM is ~100x more CPU per byte than the feature battery, which is
+    why a compact input is spread over every core (``map_docs``)."""
 
-    EM is ~100x more CPU per byte than the feature battery, so a
-    compact input (e.g. one small parquet file = ONE scan partition)
-    would serialize the whole fit into one task. When the input has
-    fewer partitions than ``defaultParallelism``, the fit spends one
-    round-robin shuffle of (doc_id, tokens) to use every core — at
-    real scale inputs have >= that many partitions and this is a
-    no-op."""
+    def fit(doc_id, tokens):
+        x = np.asarray(tokens, dtype="int64")
+        if max_obs:
+            x = x[:max_obs]
+        seed = zlib.crc32(str(doc_id).encode()) & 0xFFFFFFFF
+        try:
+            res = fit_poisson_hmm(
+                x, m_states, init_lambda_method, init_gamma_method,
+                init_delta_method, fill_diag, seed, max_iter, tol)
+        except Exception:
+            return {"m_states": m_states, "lambda": None, "gamma": None,
+                    "delta": None, "nll": None, "aic": None, "bic": None,
+                    "n_iter": 0, "success": False}
+        return {"m_states": m_states, "lambda": res["lambda"].tolist(),
+                "gamma": res["gamma"].tolist(),
+                "delta": res["delta"].tolist(),
+                **{k: res[k] for k in ("nll", "aic", "bic", "n_iter",
+                                       "success")}}
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, tokens in zip(pdf["doc_id"], pdf["tokens"]):
-                x = np.asarray(tokens, dtype="int64")
-                if max_obs:
-                    x = x[:max_obs]
-                seed = zlib.crc32(str(doc_id).encode()) & 0xFFFFFFFF
-                try:
-                    res = fit_poisson_hmm(
-                        x, m_states, init_lambda_method, init_gamma_method,
-                        init_delta_method, fill_diag, seed, max_iter, tol)
-                except Exception:
-                    rows.append((doc_id, m_states, None, None, None,
-                                 None, None, None, 0, False))
-                    continue
-                rows.append((doc_id, m_states, res["lambda"].tolist(),
-                             [r.tolist() for r in res["gamma"]],
-                             res["delta"].tolist(), res["nll"], res["aic"],
-                             res["bic"], res["n_iter"], res["success"]))
-            yield pd.DataFrame(rows, columns=[
-                "doc_id", "m_states", "lambda", "gamma", "delta", "nll",
-                "aic", "bic", "n_iter", "success"])
-
-    from .session import spread_compact
-    src = spread_compact(docs.select("doc_id", "tokens"))
-    return src.mapInPandas(gen, HMM_SCHEMA)
+    return map_docs(docs, fit, HMM_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -287,13 +281,9 @@ def estep_b_table(lam, max_x: int = 255) -> np.ndarray:
     return np.exp(logb - logb.max(axis=1, keepdims=True))
 
 
-def _estep_full_m2(x: np.ndarray, btab: np.ndarray,
-                   gamma, delta) -> tuple[np.ndarray, ...]:
-    """The m=2 scalar-order E-step with every intermediate exposed:
-    (a0, a1, c, be0, be1, b0, b1, p0, p1). Shared by
-    ``estep_posteriors_m2`` (same operation sequence as before the
-    split) and ``em_update_m2`` (which also needs b/β for the ξ
-    sums)."""
+def _table_obs(x, btab: np.ndarray) -> np.ndarray:
+    """``x`` as validated observations that index the emission table
+    ``btab``."""
     x = assert_poisson_input(np.asarray(x))
     if x.size and int(x.max()) >= btab.shape[0]:
         raise ValueError(
@@ -301,6 +291,17 @@ def _estep_full_m2(x: np.ndarray, btab: np.ndarray,
             f"max_x={btab.shape[0] - 1}; rebuild the table with a "
             f"larger max_x (estep_b_table / the estep_docs max_x "
             f"parameter)")
+    return x
+
+
+def _estep_full_m2(x: np.ndarray, btab: np.ndarray,
+                   gamma, delta) -> tuple[np.ndarray, ...]:
+    """The m=2 scalar-order E-step with every intermediate exposed:
+    (a0, a1, c, be0, be1, b0, b1, p0, p1). Shared by
+    ``estep_posteriors_m2`` (same operation sequence as before the
+    split) and ``em_update_m2`` (which also needs b/β for the ξ
+    sums)."""
+    x = _table_obs(x, btab)
     T = x.size
     (g00, g01), (g10, g11) = gamma
     d0, d1 = delta
@@ -424,32 +425,10 @@ def estep_posteriors(x: np.ndarray, btab: np.ndarray,
     hmm/poisson.py:78-98); the m=2 scalar variant remains the oracle
     gate's bit-exact twin, this is the API for arbitrary state counts
     (decode a corpus against any trained model)."""
-    x = assert_poisson_input(np.asarray(x))
-    if x.size and int(x.max()) >= btab.shape[0]:
-        raise ValueError(
-            f"token id {int(x.max())} exceeds the emission table's "
-            f"max_x={btab.shape[0] - 1}; rebuild the table with a "
-            f"larger max_x (estep_b_table / the estep_docs max_x "
-            f"parameter)")
-    T = x.size
-    G = np.asarray(gamma, dtype="float64")
-    m = G.shape[0]
-    b = btab[x]                                   # (T, m)
-    alpha = np.empty((T, m))
-    c = np.empty(T)
-    phi = np.asarray(delta, dtype="float64") * b[0]
-    c[0] = phi.sum()
-    alpha[0] = phi / c[0]
-    for t in range(1, T):
-        phi = (alpha[t - 1] @ G) * b[t]
-        c[t] = phi.sum()
-        alpha[t] = phi / c[t]
-    beta = np.empty((T, m))
-    beta[-1] = 1.0
-    for t in range(T - 2, -1, -1):
-        beta[t] = (G @ (b[t + 1] * beta[t + 1])) / c[t + 1]
-    post = alpha * beta
-    post /= post.sum(axis=1, keepdims=True)
+    x = _table_obs(x, btab)
+    alpha, c, _beta, post = _forward_backward(
+        btab[x], np.asarray(gamma, dtype="float64"),
+        np.asarray(delta, dtype="float64"))
     return alpha, c, post
 
 
@@ -463,45 +442,30 @@ def estep_docs(docs: DataFrame, lam, gamma, delta,
     gate's bit-exact twin); any other m uses the vectorized
     ``estep_posteriors``.
 
-    Like ``fit_hmm_docs``, the per-doc scan is CPU-bound Python, so a
-    compact input (one small parquet file = one scan partition) is
-    spread with one round-robin shuffle when it has fewer partitions
-    than the cluster (a no-op at real scale). ``max_x`` bounds the emission
-    table (default byte-range token ids); the kernel raises a
+    One ``session.map_docs`` stage, like ``fit_hmm_docs``. ``max_x``
+    bounds the emission table (default byte-range token ids); the kernel raises a
     descriptive ValueError for token ids past it."""
     btab = estep_b_table(lam, max_x=max_x)
     m = len(lam)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id, tokens in zip(pdf["doc_id"], pdf["tokens"]):
-                x = np.asarray(tokens, dtype="int64")
-                if x.size == 0:
-                    continue
-                if m == 2:
-                    a0, c, p0, p1 = estep_posteriors_m2(
-                        x, btab, gamma, delta)
-                    cols = {"alpha0": a0, "cscale": c,
-                            "post0": p0, "post1": p1}
-                else:
-                    alpha, c, post = estep_posteriors(
-                        x, btab, gamma, delta)
-                    cols = {"alpha0": alpha[:, 0], "cscale": c}
-                    cols.update({f"post{j}": post[:, j]
-                                 for j in range(m)})
-                out.append(pd.DataFrame({
-                    "doc_id": np.repeat(doc_id, x.size),
-                    "t": np.arange(x.size, dtype="int32"), **cols}))
-            if out:
-                yield pd.concat(out, ignore_index=True)
+    def estep(doc_id, tokens):
+        x = np.asarray(tokens, dtype="int64")
+        if x.size == 0:
+            return None
+        if m == 2:
+            a0, c, p0, p1 = estep_posteriors_m2(x, btab, gamma, delta)
+            posts = {"post0": p0, "post1": p1}
+        else:
+            alpha, c, post = estep_posteriors(x, btab, gamma, delta)
+            a0 = alpha[:, 0]
+            posts = {f"post{j}": post[:, j] for j in range(m)}
+        return {"t": np.arange(x.size, dtype="int32"), "alpha0": a0,
+                "cscale": c, **posts}
 
-    from .session import spread_compact
-    src = spread_compact(docs.select("doc_id", "tokens"))
     post_cols = ", ".join(f"post{j} double" for j in range(m))
-    return src.mapInPandas(
-        gen, f"doc_id string, t int, alpha0 double, cscale double, "
-             f"{post_cols}")
+    return map_docs(
+        docs, estep, f"doc_id string, t int, alpha0 double, "
+                     f"cscale double, {post_cols}")
 
 
 EM_STEP_COLS = ["lam0_next", "lam1_next", "g00_next", "g01_next",
@@ -516,39 +480,29 @@ def em_step_docs(docs: DataFrame, lam, gamma, delta,
     per-doc update columns (λ', Γ', δ', ll — constant across the
     doc's rows) appended. Docs with fewer than 2 tokens are skipped
     (the ξ sums need a transition; poisson_em degenerates there too).
-    Same spread_compact policy as ``estep_docs``. ``max_x`` bounds the
+    One ``session.map_docs`` stage. ``max_x`` bounds the
     emission table — raise it for vocabularies beyond byte-range token
     ids (the kernel raises a descriptive ValueError past it)."""
     btab = estep_b_table(lam, max_x=max_x)
     bmax_tab = estep_bmax_table(lam, max_x=max_x)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id, tokens in zip(pdf["doc_id"], pdf["tokens"]):
-                x = np.asarray(tokens, dtype="int64")
-                if x.size < 2:
-                    continue
-                # ONE forward-backward pass feeds both the posterior
-                # columns and the M-step update
-                full = _estep_full_m2(x, btab, gamma, delta)
-                a0, _a1, c, _be0, _be1, _b0, _b1, p0, p1 = full
-                upd = _em_update_from_full(x, full, bmax_tab, gamma)
-                out.append(pd.DataFrame({
-                    "doc_id": np.repeat(doc_id, x.size),
-                    "t": np.arange(x.size, dtype="int32"),
-                    "alpha0": a0, "cscale": c, "post0": p0, "post1": p1,
-                    **{k: np.repeat(upd[k], x.size)
-                       for k in EM_STEP_COLS}}))
-            if out:
-                yield pd.concat(out, ignore_index=True)
+    def em_step(doc_id, tokens):
+        x = np.asarray(tokens, dtype="int64")
+        if x.size < 2:
+            return None
+        # ONE forward-backward pass feeds both the posterior columns
+        # and the M-step update
+        full = _estep_full_m2(x, btab, gamma, delta)
+        a0, _a1, c, _be0, _be1, _b0, _b1, p0, p1 = full
+        return {"t": np.arange(x.size, dtype="int32"), "alpha0": a0,
+                "cscale": c, "post0": p0, "post1": p1,
+                **_em_update_from_full(x, full, bmax_tab, gamma)}
 
-    from .session import spread_compact
-    src = spread_compact(docs.select("doc_id", "tokens"))
     upd_cols = ", ".join(f"{k} double" for k in EM_STEP_COLS)
-    return src.mapInPandas(
-        gen, f"doc_id string, t int, alpha0 double, cscale double, "
-             f"post0 double, post1 double, {upd_cols}")
+    return map_docs(
+        docs, em_step, f"doc_id string, t int, alpha0 double, "
+                       f"cscale double, post0 double, post1 double, "
+                       f"{upd_cols}")
 
 
 def _ratio_emission_tables(l0: float, l1: float,
@@ -606,46 +560,35 @@ def em_two_iter_docs(docs: DataFrame, lam, gamma, delta,
     parameters and log-likelihoods plus the ll improvement — the
     convergence signal ``poisson_em`` tests each round. States stay
     in init order (pre-sort, like ``em_step_docs``); docs need
-    n_tok >= 2. Same shuffle-free one-mapInPandas scale shape as
-    every per-doc kernel here."""
+    n_tok >= 2. One ``session.map_docs`` stage, like every per-doc
+    kernel here."""
     btab = estep_b_table(lam, max_x=max_x)
     bmax_tab = estep_bmax_table(lam, max_x=max_x)
-    cols = (["doc_id", "n_tok"]
-            + [f"{c}_{t}" for t in ("1", "2") for c in EM2_ITER_COLS]
-            + ["dll"])
+    iter_cols = [f"{c}_{t}" for t in ("1", "2") for c in EM2_ITER_COLS]
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id, tokens in zip(pdf["doc_id"], pdf["tokens"]):
-                x = np.asarray(tokens, dtype="int64")
-                if x.size < 2:
-                    continue
-                full1 = _estep_full_m2(x, btab, gamma, delta)
-                u1 = _em_update_from_full(x, full1, bmax_tab, gamma)
-                l0 = _quant16(u1["lam0_next"])
-                l1 = _quant16(u1["lam1_next"])
-                g2 = ((_quant16(u1["g00_next"]), _quant16(u1["g01_next"])),
-                      (_quant16(u1["g10_next"]), _quant16(u1["g11_next"])))
-                d2 = (_quant16(u1["delta0_next"]),
-                      _quant16(u1["delta1_next"]))
-                btab2, bmax2 = _ratio_emission_tables(l0, l1, int(x.max()))
-                full2 = _estep_full_m2(x, btab2, g2, d2)
-                u2 = _em_update_from_full(x, full2, bmax2, g2)
-                row = {"doc_id": doc_id, "n_tok": int(x.size)}
-                for tag, u in (("1", u1), ("2", u2)):
-                    for col, key in zip(EM2_ITER_COLS, EM_STEP_COLS):
-                        row[f"{col}_{tag}"] = u[key]
-                row["dll"] = u2["ll"] - u1["ll"]
-                out.append(row)
-            if out:
-                yield pd.DataFrame(out, columns=cols)
+    def em_two_iter(doc_id, tokens):
+        x = np.asarray(tokens, dtype="int64")
+        if x.size < 2:
+            return None
+        full1 = _estep_full_m2(x, btab, gamma, delta)
+        u1 = _em_update_from_full(x, full1, bmax_tab, gamma)
+        l0 = _quant16(u1["lam0_next"])
+        l1 = _quant16(u1["lam1_next"])
+        g2 = ((_quant16(u1["g00_next"]), _quant16(u1["g01_next"])),
+              (_quant16(u1["g10_next"]), _quant16(u1["g11_next"])))
+        d2 = (_quant16(u1["delta0_next"]), _quant16(u1["delta1_next"]))
+        btab2, bmax2 = _ratio_emission_tables(l0, l1, int(x.max()))
+        full2 = _estep_full_m2(x, btab2, g2, d2)
+        u2 = _em_update_from_full(x, full2, bmax2, g2)
+        row = {"n_tok": int(x.size), "dll": u2["ll"] - u1["ll"]}
+        for tag, u in (("1", u1), ("2", u2)):
+            for col, key in zip(EM2_ITER_COLS, EM_STEP_COLS):
+                row[f"{col}_{tag}"] = u[key]
+        return row
 
-    from .session import spread_compact
-    src = spread_compact(docs.select("doc_id", "tokens"))
-    return src.mapInPandas(
-        gen, "doc_id string, n_tok int, "
-             + ", ".join(f"{c} double" for c in cols[2:]))
+    return map_docs(
+        docs, em_two_iter, "doc_id string, n_tok int, "
+        + ", ".join(f"{c} double" for c in iter_cols + ["dll"]))
 
 
 # ---------------------------------------------------------------------------

@@ -19,6 +19,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import map_docs
+
 MERSENNE = 2_147_483_647          # 2^31 - 1
 _A0, _B0 = 1_103_515_245, 12_345  # LCG-style deterministic hash params
 
@@ -459,24 +461,14 @@ def _doc_passages(docs: DataFrame, k: int, key: str) -> DataFrame:
     if key != "hash":
         raise ValueError(f"unknown key {key!r}")
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id, toks in zip(pdf["doc_id"], pdf["tokens"]):
-                t = np.asarray(toks, dtype="int64")
-                if t.size < k:
-                    continue
-                keys = _rolling_keys(t, k)
-                out.append(pd.DataFrame({
-                    "doc_id": np.repeat(doc_id, keys.size),
-                    "pos": np.arange(keys.size, dtype="int32"),
-                    "pkey": keys}))
-            if out:
-                yield pd.concat(out, ignore_index=True)
+    def passages(doc_id, toks):
+        t = np.asarray(toks, dtype="int64")
+        if t.size < k:
+            return None
+        keys = _rolling_keys(t, k)
+        return {"pos": np.arange(keys.size, dtype="int32"), "pkey": keys}
 
-    from ..session import spread_compact
-    src = spread_compact(docs.select("doc_id", "tokens"))
-    return src.mapInPandas(gen, "doc_id string, pos int, pkey long")
+    return map_docs(docs, passages, "doc_id string, pos int, pkey long")
 
 
 def _dup_table(passages: DataFrame, min_docs: int) -> DataFrame:

@@ -8,13 +8,11 @@ applies them to fixed-length segments (cdim needs >= 2400 samples,
 features.py:24-73)."""
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from .functions import kernels
+from .session import map_docs
 
 NONLINEAR_SCHEMA = ("doc_id string, cdim double, correlogram double, "
                     "acf_lag1 double, acf_min_lag int")
@@ -26,40 +24,31 @@ def extract_nonlinear(docs: DataFrame, corr_wlen: int = 50,
     """Per-doc nonlinear battery on the first ``max_samples`` tokens:
     Bader cdim (if >= 2400 samples), total correlogram, acf stats.
 
-    cdim/correlogram are heavily CPU-bound per doc, so a compact input
-    (one small parquet file = one scan partition) would serialize the
-    stage; below defaultParallelism partitions it spends one
-    round-robin shuffle to use every core (no-op at real scale — same
-    policy as hmm.fit_hmm_docs)."""
+    One ``session.map_docs`` stage: cdim/correlogram are heavily
+    CPU-bound per doc, so a compact input is spread over every core."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cdim_need = (2400 - 10 - 1) + 79 * 14 + 1   # default delay/m_dim
-        for pdf in batches:
-            rows = []
-            for doc_id, tokens in zip(pdf["doc_id"], pdf["tokens"]):
-                sig = np.asarray(tokens, dtype="float64")[:max_samples]
-                cdim = np.nan
-                if sig.size >= cdim_need:
-                    # tokens -> [-1, 1] (signal/tools.py:198-207) then the
-                    # reference's fti16 + Bader kernel (features.py:24-73)
-                    mx = np.abs(sig).max()
-                    unit = sig / mx if mx > 0 else sig
-                    cdim = float(kernels.cdim(unit[None, :], 14, 80)[0])
-                corr = np.nan
-                if sig.size > corr_wlen + corr_delay:
-                    corr = float(kernels.correlogram(
-                        sig, corr_wlen, corr_delay, total=True)[0])
-                a = kernels.acf(sig)
-                lag1 = float(a[1]) if a.size > 1 else np.nan
-                neg = np.where(a < 0)[0]
-                min_lag = int(neg[0]) if neg.size else -1
-                rows.append((doc_id, cdim, corr, lag1, min_lag))
-            yield pd.DataFrame(rows, columns=[
-                "doc_id", "cdim", "correlogram", "acf_lag1", "acf_min_lag"])
+    cdim_need = (2400 - 10 - 1) + 79 * 14 + 1   # default delay/m_dim
 
-    from .session import spread_compact
-    return spread_compact(docs.select("doc_id", "tokens")) \
-        .mapInPandas(gen, NONLINEAR_SCHEMA)
+    def battery(doc_id, tokens):
+        sig = np.asarray(tokens, dtype="float64")[:max_samples]
+        cdim = np.nan
+        if sig.size >= cdim_need:
+            # tokens -> [-1, 1] (signal/tools.py:198-207) then the
+            # reference's fti16 + Bader kernel (features.py:24-73)
+            mx = np.abs(sig).max()
+            unit = sig / mx if mx > 0 else sig
+            cdim = float(kernels.cdim(unit[None, :], 14, 80)[0])
+        corr = np.nan
+        if sig.size > corr_wlen + corr_delay:
+            corr = float(kernels.correlogram(
+                sig, corr_wlen, corr_delay, total=True)[0])
+        a = kernels.acf(sig)
+        neg = np.where(a < 0)[0]
+        return {"cdim": cdim, "correlogram": corr,
+                "acf_lag1": float(a[1]) if a.size > 1 else np.nan,
+                "acf_min_lag": int(neg[0]) if neg.size else -1}
+
+    return map_docs(docs, battery, NONLINEAR_SCHEMA)
 
 
 def bandpass_docs(docs: DataFrame, fps: int, low: float, high: float,
@@ -68,14 +57,10 @@ def bandpass_docs(docs: DataFrame, fps: int, low: float, high: float,
     (doc_id, filtered array<double>). IIR state is order-dependent so
     each doc filters sequentially inside the UDF; docs in a batch are
     independent."""
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        b, a = kernels.butter_bandpass_coef(low, high, fps, order)
-        for pdf in batches:
-            rows = []
-            for doc_id, tokens in zip(pdf["doc_id"], pdf["tokens"]):
-                sig = np.asarray(tokens, dtype="float64")
-                rows.append((doc_id, kernels.lfilter(b, a, sig)))
-            yield pd.DataFrame(rows, columns=["doc_id", "filtered"])
+    b, a = kernels.butter_bandpass_coef(low, high, fps, order)
 
-    return docs.select("doc_id", "tokens").mapInPandas(
-        gen, "doc_id string, filtered array<double>")
+    def bandpass(doc_id, tokens):
+        sig = np.asarray(tokens, dtype="float64")
+        return {"filtered": kernels.lfilter(b, a, sig)[None, :]}
+
+    return map_docs(docs, bandpass, "doc_id string, filtered array<double>")

@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .functions import kernels
+from .session import map_docs
 from .spectral import FeatureConfig, extract_features
 
 
@@ -200,42 +201,25 @@ def _detect_onsets_fused(docs: DataFrame, cfg: FeatureConfig,
     extend, pad, causal = p.extend, p.pad, cfg.causal
     window, n_fft_c, norm, fps = cfg.window, cfg.n_fft, cfg.norm, cfg.fps
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id, tokens in zip(pdf["doc_id"], pdf["tokens"]):
-                sig = np.asarray(tokens, dtype="float64")
-                if sig.size < n_perseg:
-                    continue
-                if causal:
-                    segs, centers = kernels.causal_frame_signal(
-                        sig, n_perseg, n_overlap)
-                else:
-                    segs = kernels.frame_signal(
-                        sig, n_perseg, n_overlap, extend, pad)
-                    centers = kernels.segment_centers(
-                        segs.shape[0], n_perseg, n_overlap, extend)
-                mag = kernels.rfft_mag(segs, window, n_fft_c, norm)
-                flux = kernels.spectral_flux(mag)
-                value = np.maximum(flux, flux.mean())
-                peaks = pick_peaks_series(
-                    value, n_after, n_before, alpha, delta)
-                if peaks.size:
-                    frames = centers[peaks]
-                    out.append(pd.DataFrame({
-                        "doc_id": np.repeat(doc_id, peaks.size),
-                        "frame": frames,
-                        "time": frames / fps}))
-            if out:
-                yield pd.concat(out, ignore_index=True)
+    def detect(doc_id, tokens):
+        sig = np.asarray(tokens, dtype="float64")
+        if sig.size < n_perseg:
+            return None
+        if causal:
+            segs, centers = kernels.causal_frame_signal(
+                sig, n_perseg, n_overlap)
+        else:
+            segs = kernels.frame_signal(sig, n_perseg, n_overlap, extend, pad)
+            centers = kernels.segment_centers(
+                segs.shape[0], n_perseg, n_overlap, extend)
+        mag = kernels.rfft_mag(segs, window, n_fft_c, norm)
+        flux = kernels.spectral_flux(mag)
+        value = np.maximum(flux, flux.mean())
+        frames = centers[pick_peaks_series(
+            value, n_after, n_before, alpha, delta)]
+        return {"frame": frames, "time": frames / fps}
 
-    # compact-input guard: rfft+flux+peak-scan is CPU-bound per doc;
-    # a single-file input would otherwise run the whole detector in
-    # one task. No-op (and still zero shuffles) at real scale.
-    from .session import spread_compact
-    src = spread_compact(docs.select("doc_id", "tokens"))
-    return src.mapInPandas(
-        gen, "doc_id string, frame long, time double")
+    return map_docs(docs, detect, "doc_id string, frame long, time double")
 
 
 # ---------------------------------------------------------------------------

@@ -1,4 +1,5 @@
-"""SparkSession factory tuned for the engine.
+"""SparkSession factory tuned for the engine, and ``map_docs``, the
+one per-doc Python stage (how per-doc Python work is cut into tasks).
 
 Local mode is a single JVM; on a real cluster the same configs apply,
 with ``spark.sql.shuffle.partitions`` sized to ~2-3x total cores and AQE
@@ -8,9 +9,13 @@ from __future__ import annotations
 
 import os
 import pathlib
+from typing import Iterator
 
+import numpy as np
+import pandas as pd
 from pyspark import SparkContext
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 # Repo root — shipped via --py-files on a real cluster; in local mode the
 # forked Python workers need it on PYTHONPATH to unpickle our UDFs.
@@ -114,15 +119,56 @@ def get_spark(
     return spark
 
 
-def spread_compact(df):
-    """Round-robin repartition a DataFrame IF it has fewer partitions
-    than ``defaultParallelism`` — the compact-input guard
-    for CPU-heavy per-doc stages (EM, cdim, fused onsets): one small
-    parquet file is ONE scan partition, which would serialize the
-    whole stage into a single task. At real scale inputs carry at
-    least cores-many partitions and this is a no-op, preserving the
-    zero-shuffle plan."""
-    par = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < par:
-        return df.repartition(par)
-    return df
+def map_docs(docs: DataFrame, fn, schema: str) -> DataFrame:
+    """Run ``fn(doc_id, tokens)`` on every doc of ``docs`` in ONE
+    ``mapInPandas``: the one per-doc Python stage.
+
+    ``fn`` returns ``None`` (no rows for that doc) or a dict of the
+    output columns other than ``doc_id``. A numpy array gives one row
+    per entry of its first axis (a 2-D array gives array cells), and
+    all arrays of one doc have the same length; any other value (a
+    scalar, a list, ``None``) repeats on every row of the doc, so a
+    dict with no array is one row. ``map_docs`` fills ``doc_id``,
+    orders the columns by ``schema`` and yields only non-empty frames.
+
+    Compact-input guard: the per-doc kernels are CPU-bound Python, and
+    one small parquet file is ONE scan partition, which would
+    serialize the whole stage into a single task. An input with fewer
+    partitions than ``defaultParallelism`` is round-robin spread to
+    that many first; at real scale inputs carry at least cores-many
+    partitions and the plan stays Scan -> Project -> MapInPandas."""
+    src = docs.select("doc_id", "tokens")
+    par = docs.sparkSession.sparkContext.defaultParallelism
+    if src.rdd.getNumPartitions() < par:
+        src = src.repartition(par)
+    names = StructType.fromDDL(schema).names
+
+    def cells(v, n):
+        if isinstance(v, np.ndarray):
+            return v
+        return np.repeat(v, n) if np.isscalar(v) else [v] * n
+
+    def column(chunks):
+        if all(isinstance(c, np.ndarray) and c.ndim == 1 for c in chunks):
+            return np.concatenate(chunks)
+        return [cell for c in chunks for cell in c]
+
+    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            chunks = {name: [] for name in names}
+            n_rows = 0
+            for doc_id, tokens in zip(pdf["doc_id"], pdf["tokens"]):
+                out = fn(doc_id, tokens)
+                if out is None:
+                    continue
+                n = max((len(v) for v in out.values()
+                         if isinstance(v, np.ndarray)), default=1)
+                out["doc_id"] = doc_id
+                for name in names:
+                    chunks[name].append(cells(out[name], n))
+                n_rows += n
+            if n_rows:
+                yield pd.DataFrame({name: column(c)
+                                    for name, c in chunks.items()})
+
+    return src.mapInPandas(gen, schema)

@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 
 from .functions import kernels
 from .operators.framing import FramingParams, split_docs_halo
+from .session import map_docs
 
 
 @dataclass(frozen=True)
@@ -349,33 +350,22 @@ def dft_docs(docs: DataFrame, cfg: FeatureConfig = FeatureConfig(),
 
     Scale caveat: a 1M-token doc yields 500k bins; ``max_bins``
     truncates the emitted arrays (the full transform still runs)."""
-    from typing import Iterator as _It
     window, norm, fps = cfg.window, cfg.norm, cfg.fps
     n_fft_cfg = cfg.n_fft
+    part_fns = {"abs": np.abs, "power": lambda b: np.square(np.abs(b)),
+                "phase": np.angle}
+    for p in parts:
+        if p not in part_fns:
+            raise ValueError(p)
+
+    def dft(doc_id, tokens):
+        sig = np.asarray(tokens, dtype="float64")
+        n_fft = n_fft_cfg or sig.size
+        bins = kernels.rfft_full(sig[None, :], window, n_fft, norm)
+        return {"n_fft": n_fft, "d_frq": fps / n_fft,
+                **{p: part_fns[p](bins)[:, :max_bins or None]
+                   for p in parts}}
 
     cols = ", ".join(f"{p} array<double>" for p in parts)
-    schema = f"doc_id string, n_fft int, d_frq double, {cols}"
-
-    def gen(batches: _It[pd.DataFrame]) -> _It[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, tokens in zip(pdf["doc_id"], pdf["tokens"]):
-                sig = np.asarray(tokens, dtype="float64")
-                n_fft = n_fft_cfg or sig.size
-                bins = kernels.rfft_full(sig[None, :], window, n_fft, norm)[0]
-                row = [doc_id, n_fft, fps / n_fft]
-                for p in parts:
-                    if p == "abs":
-                        vals = np.abs(bins)
-                    elif p == "power":
-                        vals = np.square(np.abs(bins))
-                    elif p == "phase":
-                        vals = np.angle(bins)
-                    else:
-                        raise ValueError(p)
-                    row.append(vals[:max_bins] if max_bins else vals)
-                rows.append(tuple(row))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "n_fft", "d_frq", *parts])
-
-    return docs.select("doc_id", "tokens").mapInPandas(gen, schema)
+    return map_docs(
+        docs, dft, f"doc_id string, n_fft int, d_frq double, {cols}")

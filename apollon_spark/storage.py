@@ -1,30 +1,19 @@
-"""Storage layer: Iceberg when the runtime has the catalog/jars,
-identical-schema Parquet otherwise (SURVEY §7.0).
+"""Storage layer: Iceberg tables or identical-schema Parquet
+directories (SURVEY §7.0).
 
 The engine is storage-agnostic: every reader/writer goes through this
-module, so pointing ``APOLLON_SPARK_CATALOG`` at an Iceberg catalog
-upgrades all IO without code changes. Parquet fallback keeps the same
-layout (one table per directory, partition columns preserved) plus the
-pipeline's manifest markers for resume.
+module, and the location string alone picks the format — a
+filesystem path (or ``*.parquet``) is a Parquet directory, anything
+else a ``catalog.db.table`` name written as an Iceberg table. Passing
+catalog table names therefore moves all IO to Iceberg without code
+changes. Parquet keeps the same layout (one table per directory) plus
+the pipeline's manifest markers for resume. Every write overwrites.
 """
 from __future__ import annotations
 
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-
-CATALOG_ENV = "APOLLON_SPARK_CATALOG"
-
-
-def iceberg_available(spark: SparkSession) -> bool:
-    cat = os.environ.get(CATALOG_ENV)
-    if not cat:
-        return False
-    try:
-        spark.sql(f"SHOW NAMESPACES IN {cat}")
-        return True
-    except Exception:
-        return False
 
 
 def read_table(spark: SparkSession, location: str) -> DataFrame:
@@ -35,18 +24,15 @@ def read_table(spark: SparkSession, location: str) -> DataFrame:
     return spark.table(location)
 
 
-def write_table(df: DataFrame, location: str, mode: str = "overwrite",
-                partition_by: list[str] | None = None) -> None:
-    writer = df.write.mode(mode)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
+def write_table(df: DataFrame, location: str) -> None:
+    writer = df.write.mode("overwrite")
     if os.sep in location or location.endswith(".parquet"):
         writer.parquet(location)
     else:
         writer.format("iceberg").saveAsTable(location)
 
 
-def write_csv(df: DataFrame, path: str, mode: str = "overwrite") -> None:
+def write_csv(df: DataFrame, path: str) -> None:
     """Debug sink (reference FeatureSpace.to_csv, container.py:115-160).
     Array columns are JSON-encoded so the row-pivot shape survives."""
     from pyspark.sql import functions as F
@@ -54,19 +40,18 @@ def write_csv(df: DataFrame, path: str, mode: str = "overwrite") -> None:
     for name, dtype in df.dtypes:
         if dtype.startswith("array") or dtype.startswith("struct"):
             out = out.withColumn(name, F.to_json(name))
-    out.write.mode(mode).option("header", True).csv(path)
+    out.write.mode("overwrite").option("header", True).csv(path)
 
 
-def write_json(df: DataFrame, path: str, mode: str = "overwrite") -> None:
+def write_json(df: DataFrame, path: str) -> None:
     """ndarray-aware JSON sink (io/json.py:53-66): Spark renders array
     columns as JSON arrays natively."""
-    df.write.mode(mode).json(path)
+    df.write.mode("overwrite").json(path)
 
 
 def write_bucketed(df: DataFrame, table: str, bucket_cols: list[str],
                    n_buckets: int, sort_cols: list[str] | None = None,
-                   path: str | None = None,
-                   mode: str = "overwrite") -> None:
+                   path: str | None = None) -> None:
     """Write a bucketed (and optionally sorted) table — the layout
     SCALE.md §1 recommends for the docs table: bucket by the join/
     resume key (e.g. doc_id) so joins against model tables bucketed
@@ -79,7 +64,7 @@ def write_bucketed(df: DataFrame, table: str, bucket_cols: list[str],
     deployment the Iceberg catalog's bucket partition transform plays
     this role; the mechanism below is the built-in Spark one and works
     everywhere."""
-    writer = df.write.mode(mode).format("parquet") \
+    writer = df.write.mode("overwrite").format("parquet") \
         .bucketBy(n_buckets, *bucket_cols)
     if sort_cols:
         writer = writer.sortBy(*sort_cols)

@@ -48,6 +48,12 @@ def test_battery_kernels_match_oracle():
     np.testing.assert_allclose(
         kernels.spectral_flux(mag), o["flux"], rtol=RTOL, atol=ATOL)
     np.testing.assert_allclose(kernels.fspl(mag), o["fspl"], rtol=RTOL)
+    # fsplc: C-weighted magnitudes (IEC 61672), then total spectral SPL
+    f2 = np.square(frqs)
+    cw = 148693636.0 * f2 / ((f2 + 424.36) * (f2 + 148693636.0))
+    want = 10 * np.log10(np.maximum(
+        1.0, np.square(cw * mag / 2e-5).sum(axis=1)))
+    np.testing.assert_allclose(kernels.fsplc(frqs, mag), want, rtol=RTOL)
     np.testing.assert_allclose(
         kernels.loudness(frqs, mag), o["loudness"], rtol=RTOL)
     np.testing.assert_allclose(

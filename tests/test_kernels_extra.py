@@ -76,7 +76,20 @@ def test_scalar_columns(spark):
         scalars.l1_norm(F.col("x")).alias("l1"),
         scalars.rms_arr(F.col("x")).alias("rms"),
         scalars.normalize_arr(F.col("x")).alias("norm"),
+        scalars.zero_pad_arr(F.col("x"), 2).alias("padded"),
+        scalars.minamp(F.col("x")).alias("mn"),
+        scalars.limit_db(F.col("f"), 57.0).alias("limited"),
+        scalars.spl_from_rms(F.col("f")).alias("spl"),
     ).toPandas()
+    x = np.array(pdf["x"][0])
+    np.testing.assert_array_equal(list(out["padded"][0]), np.pad(x, (0, 2)))
+    assert out["mn"][0] == np.abs(x).min()
+    bound = 10.0 ** (0.05 * 57.0)
+    np.testing.assert_allclose(out["limited"], np.clip(pdf["f"], -bound, bound),
+                               rtol=1e-12)
+    assert out["limited"][1] < pdf["f"][1]
+    np.testing.assert_allclose(out["spl"], 20 * np.log10(pdf["f"] / 2e-5),
+                               rtol=1e-12)
     np.testing.assert_allclose(
         out["mel"][0], 1125 * np.log(1 + 440 / 700), rtol=1e-9)
     np.testing.assert_allclose(

@@ -5,9 +5,11 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from apollon_spark import hmm, nonlinear, onsets
 from apollon_spark.datagen import synth_docs
-from apollon_spark.operators.framing import FramingParams
-from apollon_spark.spectral import FeatureConfig, extract_features
+from apollon_spark.ml import dedup
+from apollon_spark.operators.framing import FramingParams, segment_docs
+from apollon_spark.spectral import FeatureConfig, dft_docs, extract_features
 
 
 def _plan(df) -> str:
@@ -236,7 +238,7 @@ def test_passage_canonical_pick_is_aggregate_not_window(spark):
 def test_em_two_iter_docs_plan_is_one_arrow_pass(spark):
     """The 2-iteration EM training unroll (the r05 hmm gate kernel)
     must stay the per-doc shuffle-free shape: Scan -> Project ->
-    [spread_compact round-robin] -> ONE MapInPandas. No aggregation
+    [map_docs round-robin] -> ONE MapInPandas. No aggregation
     exchange, no join — both EM iterations and the quantized handoff
     run inside one Arrow pass per doc."""
     from apollon_spark.hmm import em_two_iter_docs
@@ -249,6 +251,44 @@ def test_em_two_iter_docs_plan_is_one_arrow_pass(spark):
     assert "SortMergeJoin" not in plan and "HashAggregate" not in plan
     # the only exchange is the deliberate small-input spread
     assert plan.count("Exchange") <= 1, plan
+
+
+_EM_INIT = ((16.0, 128.0), ((0.75, 0.25), (0.375, 0.625)), (0.5, 0.5))
+
+MAP_DOCS_STAGES = {
+    "fit_hmm_docs": hmm.fit_hmm_docs,
+    "estep_docs": lambda d: hmm.estep_docs(d, *_EM_INIT),
+    "em_step_docs": lambda d: hmm.em_step_docs(d, *_EM_INIT),
+    "em_two_iter_docs": lambda d: hmm.em_two_iter_docs(d, *_EM_INIT),
+    "doc_passages": lambda d: dedup._doc_passages(d, 8, "hash"),
+    "detect_onsets": onsets.detect_onsets,
+    "extract_nonlinear": nonlinear.extract_nonlinear,
+    "bandpass_docs": lambda d: nonlinear.bandpass_docs(d, 9000, 200.0, 1200.0),
+    "segment_docs": lambda d: segment_docs(d, FramingParams()),
+    "dft_docs": dft_docs,
+}
+
+
+@pytest.mark.parametrize("stage", list(MAP_DOCS_STAGES))
+def test_map_docs_stages_spread_only_compact_input(spark, stage):
+    """Every per-doc Python stage runs through session.map_docs: ONE
+    MapInPandas, with a round-robin spread in front of it only when
+    the input has fewer partitions than defaultParallelism."""
+    run = MAP_DOCS_STAGES[stage]
+    par = spark.sparkContext.defaultParallelism
+
+    def docs(n_parts):
+        return spark.range(0, 64, 1, n_parts).select(
+            F.col("id").cast("string").alias("doc_id"),
+            F.array_repeat(F.col("id").cast("int"), 2048).alias("tokens"))
+
+    compact = _plan(run(docs(1)))
+    assert compact.count("MapInPandas") == 1, compact
+    assert compact.count("Exchange") == 1, compact
+    assert "RoundRobinPartitioning" in compact, compact
+    wide = _plan(run(docs(par)))
+    assert wide.count("MapInPandas") == 1, wide
+    assert "Exchange" not in wide, wide
 
 
 def test_cluster_and_group_canonical_picks_are_aggregates(spark):

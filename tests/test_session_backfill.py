@@ -6,6 +6,7 @@ from pyspark.sql import functions as F
 
 from apollon_spark.operators.backfill import (delay_embed_cols,
                                               fill_edges_clip,
+                                              flux_from_series,
                                               lag_lead_delta, locf,
                                               minmax_normalize,
                                               rolling_stats, smooth_stat,
@@ -66,6 +67,7 @@ def test_lag_lead_grad_np_gradient_parity(spark):
     df = spark.createDataFrame(pdf)
     got = lag_lead_delta(df, "v", on="t", by="key").toPandas() \
         .sort_values(["key", "t"])
+    flux = flux_from_series(df, "v", on="t", by="key").toPandas()
     for key, grp in pdf.groupby("key"):
         vals = grp.sort_values("t")["v"].to_numpy()
         if len(vals) < 2:
@@ -73,6 +75,8 @@ def test_lag_lead_grad_np_gradient_parity(spark):
         want = np.gradient(vals)
         g = got[got["key"] == key].sort_values("t")["v_grad"].to_numpy()
         np.testing.assert_allclose(g, want, rtol=1e-12)
+        f = flux[flux["key"] == key].sort_values("t")["flux"].to_numpy()
+        np.testing.assert_allclose(f, np.maximum(want, 0.0), rtol=1e-12)
 
 
 def test_rolling_stats(spark):

@@ -157,7 +157,8 @@ def test_init_weights_deterministic():
 def test_calibration_family(spark):
     """distribute/match_2d/transform_weights over a BMU assignment."""
     import pandas as pd
-    from apollon_spark.som import distribute, match_2d, transform_weights
+    from apollon_spark.som import (distribute, match_2d, match_flat,
+                                   transform_weights)
     rows = spark.createDataFrame(pd.DataFrame({
         "vec_id": [0, 1, 2, 3], "bmu": [2, 2, 5, 0]}))
     d = distribute(rows).orderBy("unit").toPandas()
@@ -166,6 +167,9 @@ def test_calibration_family(spark):
     m = match_2d(rows, n_cols=3).orderBy("vec_id").toPandas()
     assert list(m["bmu_row"]) == [0, 0, 1, 0]
     assert list(m["bmu_col"]) == [2, 2, 2, 0]
+    flat = match_flat(rows).orderBy("vec_id").toPandas()
+    np.testing.assert_array_equal(
+        flat["bmu"], np.ravel_multi_index((m["bmu_row"], m["bmu_col"]), (2, 3)))
     w = np.arange(12, dtype="float64").reshape(6, 2)
     t = transform_weights(rows, w).orderBy("vec_id").toPandas()
     assert list(t.loc[0, "bmu_weights"]) == [4.0, 5.0]
