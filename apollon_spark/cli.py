@@ -16,6 +16,7 @@ import json
 import sys
 from functools import partial
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
@@ -246,6 +247,9 @@ def _run(spark: SparkSession, args: argparse.Namespace) -> None:
                 f"hmm-stage 'lambda'); input has {docs.columns}. Run "
                 f"--stage hmm first, or point --input at an embedding "
                 f"table.")
+        # a failed per-doc fit (e.g. hmm on a zero-token doc) leaves a
+        # null vector: it has no map position
+        docs = docs.where(F.col(vec_col).isNotNull())
         p = SomParams(args.som_rows, args.som_cols, n_iter=args.som_epochs)
         weights, qerr = fit_batch_som(docs, vec_col, p)
         out = assign_bmu(docs, vec_col, weights)
@@ -392,7 +396,7 @@ def _run(spark: SparkSession, args: argparse.Namespace) -> None:
         q.awaitTermination()
         try:
             n_pairs = spark.read.parquet(args.output).count()
-        except Exception:
+        except AnalysisException:
             n_pairs = 0       # no near-dups -> no readable output yet
         print(json.dumps({"pairs": n_pairs}))
     elif args.stage == "stream-passages":
@@ -407,7 +411,7 @@ def _run(spark: SparkSession, args: argparse.Namespace) -> None:
         try:
             n_spans = (spark.read.parquet(args.output)
                        .select("doc_id", "pos").distinct().count())
-        except Exception:
+        except AnalysisException:
             n_spans = 0       # no duplicated passages yet
         print(json.dumps({"span_starts": n_spans}))
     elif args.stage == "pack":

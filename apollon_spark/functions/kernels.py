@@ -533,9 +533,11 @@ def cdim(inp_segs: np.ndarray, delay: int, m_dim: int, n_bins: int = 1000,
 
 def acf(sig: np.ndarray) -> np.ndarray:
     """Normalized autocorrelation at all lags (signal/tools.py:32-54),
-    FFT-based."""
+    FFT-based. An empty signal has no lags: empty result."""
     sig = np.asarray(sig, dtype="float64").ravel()
     n = sig.size
+    if n == 0:
+        return sig
     nfft = 1 << int(np.ceil(np.log2(2 * n - 1)))
     spec = np.fft.rfft(sig, nfft)
     full = np.fft.irfft(spec * np.conj(spec), nfft)[:n]

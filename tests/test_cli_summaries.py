@@ -308,3 +308,34 @@ def test_default_driver_heap_fits_the_machine(spark):
     ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
     assert mem.endswith("g")
     assert 1 <= int(mem[:-1]) <= min(48, max(1, ram // 1024 ** 3 // 2))
+
+
+def test_stream_stages_degenerate_corpora(spark, tmp_path):
+    """`--stage stream-neardup` and `--stage stream-passages` end to end
+    (one availableNow run each, fresh store and checkpoint): the empty,
+    one-doc and n_tok in {0, 1} tables print zero counts, and five
+    identical 20-token docs print all 10 pairs and all 5 x 13 window
+    starts at k = 8."""
+    toks = list(range(100, 120))
+    tables = {"empty": [], "one": TABLES["one"], "short": TABLES["short"],
+              "same5": [_doc(f"s{i}", toks) for i in range(5)]}
+    want = {name: ({"pairs": 0}, {"span_starts": 0}) for name in tables}
+    want["same5"] = ({"pairs": 10}, {"span_starts": 65})
+    got = {}
+    for name, rows in tables.items():
+        inp = str(tmp_path / name / "in")
+        storage.write_table(spark.createDataFrame(rows, SCHEMA), inp)
+        printed = []
+        for stage in ("stream-neardup", "stream-passages"):
+            run = str(tmp_path / name / stage)
+            buf = io.StringIO()
+            with contextlib.redirect_stdout(buf):
+                assert cli.main([
+                    "--stage", stage, "--input", inp,
+                    "--output", os.path.join(run, "out"),
+                    "--store", os.path.join(run, "store"),
+                    "--checkpoint", os.path.join(run, "ckpt"),
+                    "--passage-k", "8"]) == 0
+            printed.append(json.loads(buf.getvalue().strip().splitlines()[-1]))
+        got[name] = tuple(printed)
+    assert got == want

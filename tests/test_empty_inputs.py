@@ -248,3 +248,95 @@ def test_semdedup_stage_degenerate_corpora(spark, tmp_path, capsys):
         "zero3": {"vectors": 3, "kept": 3, "dropped": 0},
         "rand3": {"vectors": 3, "kept": 3, "dropped": 0},
     }
+
+
+def test_nonlinear_degenerate_docs(spark):
+    """An empty doc gets the same row as a one-token doc (no lags, so
+    null descriptors and no negative acf lag); a normal doc beside them
+    is unaffected. One row per doc."""
+    from apollon_spark.nonlinear import extract_nonlinear
+    rng = np.random.default_rng(5)
+    docs = spark.createDataFrame(
+        [("z0", [], 0, "s"), ("z1", [7], 1, "s"),
+         ("d0", rng.poisson(5, 200).tolist(), 200, "s")],
+        "doc_id string, tokens array<int>, n_tok int, source string")
+    got = {r["doc_id"]: r.asDict() for r in
+           extract_nonlinear(docs).collect()}
+    assert sorted(got) == ["d0", "z0", "z1"]
+    for doc_id in ("z0", "z1"):
+        assert got[doc_id] == {"doc_id": doc_id, "cdim": None,
+                               "correlogram": None, "acf_lag1": None,
+                               "acf_min_lag": -1}
+    assert got["d0"]["correlogram"] is not None
+    assert got["d0"]["acf_lag1"] is not None
+
+
+DOCS_SCHEMA = "doc_id string, tokens array<int>, n_tok int, source string"
+
+
+def _cli_table(spark, tmp_path, stage, rows, *extra):
+    """Write ``rows`` as a docs table, run ``--stage`` on it through
+    ``cli.main``; returns the output path."""
+    from apollon_spark import cli, storage
+    src = str(tmp_path / f"{stage}_in")
+    out = str(tmp_path / f"{stage}_out")
+    storage.write_table(spark.createDataFrame(rows, DOCS_SCHEMA), src)
+    assert cli.main(["--stage", stage, "--input", src, "--output", out,
+                     *extra]) == 0
+    return out
+
+
+def test_onsets_stage_degenerate_corpora(spark, tmp_path):
+    """`--stage onsets` end to end: empty, one-doc and n_tok in {0, 1}
+    tables write no crash; docs shorter than a frame get no onsets, and
+    five identical docs get identical, non-empty onsets."""
+    from apollon_spark import storage
+    rng = np.random.default_rng(8)
+    toks = (rng.integers(0, 5, 256)
+            + np.where(np.arange(256) % 64 == 32, 200, 0)).tolist()
+    cases = {
+        "empty": [],
+        "one": [("d0", toks, len(toks), "s")],
+        "short": [("z0", [], 0, "s"), ("z1", [7], 1, "s")],
+        "same5": [(f"d{i}", toks, len(toks), "s") for i in range(5)],
+    }
+    got = {}
+    for name, rows in cases.items():
+        out = _cli_table(spark, tmp_path / name, "onsets", rows,
+                         "--n-perseg", "16", "--n-overlap", "8")
+        got[name] = storage.read_table(spark, out).toPandas()
+    assert len(got["empty"]) == 0 and len(got["short"]) == 0
+    one = sorted(got["one"]["frame"])
+    assert one
+    by_doc = got["same5"].groupby("doc_id")["frame"].apply(sorted)
+    assert sorted(by_doc.index) == [f"d{i}" for i in range(5)]
+    assert all(frames == one for frames in by_doc)
+
+
+def test_som_stage_skips_failed_hmm_fits(spark, tmp_path, capsys):
+    """hmm -> som end to end: a zero-token doc's failed fit leaves a
+    null lambda; `--stage som` maps every other doc and leaves that one
+    out. A table of failed fits alone still raises 'empty input'."""
+    from apollon_spark import cli, storage
+    rng = np.random.default_rng(1)
+    rows = [(f"d{i}", rng.poisson(5, 200).tolist(), 200, "s")
+            for i in range(12)]
+    rows += [("z0", [], 0, "s"), ("z1", [7], 1, "s")]
+    hmm = _cli_table(spark, tmp_path, "hmm", rows, "--m-states", "2")
+    fits = storage.read_table(spark, hmm)
+    fitted = {r["doc_id"] for r in
+              fits.where("lambda IS NOT NULL").select("doc_id").collect()}
+    assert "z0" not in fitted and len(fitted) == 13
+    som = str(tmp_path / "som_out")
+    assert cli.main(["--stage", "som", "--input", hmm, "--output", som,
+                     "--som-rows", "3", "--som-cols", "3"]) == 0
+    assert "qerr" in capsys.readouterr().out
+    mapped = storage.read_table(spark, som)
+    assert {r["doc_id"] for r in mapped.collect()} == fitted
+    assert mapped.where("bmu IS NULL").count() == 0
+
+    failed = str(tmp_path / "failed_fits")
+    storage.write_table(fits.where("lambda IS NULL"), failed)
+    with pytest.raises(ValueError, match="empty input"):
+        cli.main(["--stage", "som", "--input", failed, "--output",
+                  str(tmp_path / "som_failed")])

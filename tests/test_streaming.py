@@ -76,6 +76,30 @@ def test_stream_features_matches_batch(spark, tmp_path):
     np.testing.assert_allclose(got["sharpness"], want["sharpness"], rtol=1e-12)
 
 
+def test_stream_features_replayed_epoch_is_exactly_once(spark, tmp_path):
+    """A micro-batch replayed after a crash (its commit record lost)
+    rewrites its own epoch partition instead of appending its rows a
+    second time."""
+    from apollon_spark.datagen import synth_docs
+    from apollon_spark.operators.framing import FramingParams
+    from apollon_spark.spectral import FeatureConfig
+    from apollon_spark.streaming import stream_features
+
+    src, out, ckpt = (str(tmp_path / n) for n in ("src", "out", "ckpt"))
+    synth_docs(spark, 4, whales=False).write.mode("overwrite").parquet(src)
+    cfg = FeatureConfig(framing=FramingParams(128, 64))
+    stream_features(spark, src, out, ckpt, cfg).awaitTermination(120)
+    n_first = spark.read.parquet(out).count()
+    for name in ("0", ".0.crc"):
+        os.remove(os.path.join(ckpt, "commits", name))
+    stream_features(spark, src, out, ckpt, cfg).awaitTermination(120)
+    got = spark.read.parquet(out)
+    assert n_first > 0
+    assert got.count() == n_first
+    assert {r["epoch"] for r in got.select("epoch").distinct().collect()} \
+        == {0}
+
+
 def test_stream_peak_picker_state_carries(spark, tmp_path):
     """The recursive smoother's state must persist across micro-batches:
     a spike in batch 2 is suppressed if batch 1 ended with high g."""
@@ -265,7 +289,7 @@ def test_stream_neardup_store_is_partition_pruned(spark, tmp_path):
     (input_file_name) and re-delivery dedup (anti-join) at once."""
     import numpy as np
     from pyspark.sql import functions as F
-    from apollon_spark.streaming import banded_store_read, \
+    from apollon_spark.streaming import pruned_store_read, \
         stream_minhash_neardup
 
     rng = np.random.default_rng(9)
@@ -297,8 +321,7 @@ def test_stream_neardup_store_is_partition_pruned(spark, tmp_path):
     # files — partition pruning visible in the files actually scanned
     one = store_all.select("band", "pfx").distinct().orderBy(
         "band", "pfx").first()
-    pruned = banded_store_read(spark, paths["store"],
-                               [(one["band"], one["pfx"])], epoch_id=999)
+    pruned = pruned_store_read(spark, paths["store"], [one], epoch_id=999)
     files = [r[0] for r in
              pruned.select(F.input_file_name()).distinct().collect()]
     assert files, "pruned read must still see the matching bucket"
@@ -417,38 +440,49 @@ def test_stream_duplicate_passages_matches_batch(spark, tmp_path):
     assert got == want
 
 
-def test_store_meta_guard(tmp_path):
-    """The store pins its layout parameters: same params reopen fine,
-    a different n_prefixes (which would break partition pruning and
-    silently miss duplicates) raises."""
-    import pytest as _pytest
+def test_stream_passages_store_is_partition_pruned(spark, tmp_path):
+    """The passage store prunes like the signature store: a one-key
+    read scans only that prefix's files, by a partition filter."""
+    import numpy as np
+    from pyspark.sql import functions as F
+    from apollon_spark.streaming import (pruned_store_read,
+                                         stream_duplicate_passages)
 
+    rng = np.random.default_rng(3)
+    shared = rng.integers(0, 300, 20).tolist()
+    rows = [(f"d{i}", shared + rng.integers(0, 300, 20).tolist(), 40, "s")
+            for i in range(3)]
+    src = str(tmp_path / "src")
+    spark.createDataFrame(
+        rows, "doc_id string, tokens array<int>, n_tok int, source string"
+    ).write.parquet(src)
+    paths = {n: str(tmp_path / n) for n in ("store", "spans", "ckpt")}
+    stream_duplicate_passages(spark, src, paths["store"], paths["spans"],
+                              paths["ckpt"], k=8,
+                              n_prefixes=8).awaitTermination()
+
+    store = spark.read.parquet(paths["store"])
+    assert store.select("pfx").distinct().count() > 1
+    one = store.select("pfx").distinct().orderBy("pfx").first()
+    pruned = pruned_store_read(spark, paths["store"], [one], epoch_id=999)
+    files = [r[0] for r in
+             pruned.select(F.input_file_name()).distinct().collect()]
+    assert files, "pruned read must still see the matching prefix"
+    for f in files:
+        assert f"/pfx={one['pfx']}/" in f
+    plan = pruned._jdf.queryExecution().executedPlan().toString()
+    assert "PartitionFilters" in plan
+
+
+def test_store_meta_guard(spark, tmp_path):
+    """The store pins its layout parameters through the Hadoop
+    FileSystem API (the same call resolves s3a:// and hdfs:// URIs):
+    same params reopen fine, a different n_prefixes (which would break
+    partition pruning and silently miss duplicates) raises."""
     from apollon_spark.streaming import store_meta_guard
     store = str(tmp_path / "sigs")
     params = {"kind": "minhash", "n_prefixes": 16, "n_bands": 4}
-    store_meta_guard(store, params)
-    store_meta_guard(store, dict(params))          # idempotent reopen
-    with _pytest.raises(ValueError, match="partition pruning"):
-        store_meta_guard(store, {**params, "n_prefixes": 32})
-
-
-def test_store_meta_guard_hadoop_fs(spark, tmp_path):
-    """With a SparkSession the guard resolves the meta file through
-    the Hadoop FileSystem API (works on s3a://hdfs:// URIs, unlike
-    os.path); same write/validate/raise contract, interoperable with
-    the os.path form. A scheme'd path WITHOUT spark must raise
-    instead of silently skipping the check."""
-    import pytest as _pytest
-
-    from apollon_spark.streaming import store_meta_guard
-    store = str(tmp_path / "hstore")
-    params = {"kind": "minhash", "n_prefixes": 16}
-    store_meta_guard(store, params, spark=spark)
-    store_meta_guard(store, dict(params), spark=spark)   # reopen ok
-    with _pytest.raises(ValueError, match="n_prefixes|written with"):
-        store_meta_guard(store, {**params, "n_prefixes": 32},
-                         spark=spark)
-    # interop: the os.path reader sees the hadoop-written file
-    store_meta_guard(store, dict(params))
-    with _pytest.raises(ValueError, match="SparkSession"):
-        store_meta_guard("s3a://bucket/store", params)
+    store_meta_guard(spark, store, params)
+    store_meta_guard(spark, store, dict(params))   # idempotent reopen
+    with pytest.raises(ValueError, match="partition pruning"):
+        store_meta_guard(spark, store, {**params, "n_prefixes": 32})
