@@ -486,3 +486,26 @@ def test_store_meta_guard(spark, tmp_path):
     store_meta_guard(spark, store, dict(params))   # idempotent reopen
     with pytest.raises(ValueError, match="partition pruning"):
         store_meta_guard(spark, store, {**params, "n_prefixes": 32})
+
+
+def test_store_meta_guard_hadoop_fs(spark, tmp_path):
+    """A scheme'd store URI resolves through the Hadoop FileSystem API:
+    the guard writes the meta file at the path the URI names, as plain
+    JSON, and the same store reopened by its plain local path (or by
+    the URI again) validates against that one file."""
+    import json
+
+    from apollon_spark.streaming import store_meta_guard
+    local = tmp_path / "hstore"
+    uri = local.as_uri()                       # file:///.../hstore
+    params = {"kind": "minhash", "n_prefixes": 16}
+    store_meta_guard(spark, uri, params)
+    meta = local / "_store_meta.json"
+    assert meta.is_file()
+    assert json.loads(meta.read_text()) == params
+    store_meta_guard(spark, uri, dict(params))        # reopen by URI
+    store_meta_guard(spark, str(local), dict(params))  # by plain path
+    with pytest.raises(ValueError, match="n_prefixes|written with"):
+        store_meta_guard(spark, str(local), {**params, "n_prefixes": 32})
+    with pytest.raises(ValueError, match="n_prefixes|written with"):
+        store_meta_guard(spark, uri, {**params, "n_bands": 4})
